@@ -375,16 +375,21 @@ class _LeaseHandle:
         as a genuine failure. On any exception here, re-check the
         lease: if it is no longer ours, raise ``LeaseLostError`` (the
         caller retries like a failed micro-batch); if we still hold it,
-        the failure is real — re-raise it unchanged."""
+        the failure is real — re-raise it unchanged. A lease probe that
+        itself fails (not ``LeaseLostError``) says nothing about the
+        lease, so the data-write error is re-raised then too; interrupts
+        (``BaseException``) pass through unprobed."""
         try:
             yield
         except LeaseLostError:
             raise
-        except BaseException as e:
+        except Exception as e:
             try:
                 self.validate()
             except LeaseLostError as lost:
                 raise lost from e
+            except Exception:
+                pass
             raise
 
 
@@ -602,37 +607,26 @@ def writer_lease(
 
 
 def require_no_meta_drift(
-    current: Any,
-    snapshot_batches: "set | dict",
-    version: int,
-    index_path: str,
+    current: Any, snapshot_batches: dict, version: int, index_path: str
 ) -> None:
-    """Compactor flip-time drift guard, shared by all three index
-    families: the compacted ``v_{N+1}`` tree was derived from a meta
-    snapshot, so if the live meta's batches or version pointer moved
-    since (a writer slipped past the ``writer_lease`` — stale-lease
-    break or an object store's create-if-absent race), publishing the
-    flip would silently drop that writer's batch. Abort instead: the
-    index stays live on version N, the orphan ``v_{N+1}`` tree is
-    cleaned by the next compaction, and nothing is lost.
-
-    ``snapshot_batches`` should be the FULL ``dict(meta["batches"])``
-    (ids AND row counts): a lease-bypassing writer that REPLAYS an
+    """Flip-time drift guard of the index rewrites (compaction and
+    rebuild, ``operators/stored_index.py``): the ``v_{N+1}`` tree was
+    derived from a meta snapshot, so if the live meta's batches or
+    version pointer moved since (a writer slipped past the
+    ``writer_lease`` — stale-lease break or an object store's
+    create-if-absent race), publishing the flip would silently drop
+    that writer's batch. Abort instead: the index stays live on version
+    N, the orphan ``v_{N+1}`` tree is cleaned by the next rewrite, and
+    nothing is lost. ``snapshot_batches`` is the FULL
+    ``dict(meta["batches"])``: a lease-bypassing writer that REPLAYS an
     existing batch_id leaves the key set unchanged but moves its row
-    count, and a key-set-only compare would publish a compacted tree
-    derived from the pre-replay data. A plain ``set`` is still
-    accepted (keys-only compare) for older callers."""
+    count."""
     cur_version = int((current or {}).get("version", 0))
-    if isinstance(snapshot_batches, dict):
-        cur_batches: Any = dict((current or {}).get("batches", {}))
-        snap: Any = snapshot_batches
-    else:
-        cur_batches = set((current or {}).get("batches", {}))
-        snap = set(snapshot_batches)
-    if current is None or cur_batches != snap or cur_version != version:
+    cur_batches = dict((current or {}).get("batches", {}))
+    if current is None or cur_batches != snapshot_batches or cur_version != version:
         raise RuntimeError(
             f"meta drift at {index_path} during compaction: snapshot had "
-            f"batches {sorted(snap)} at version {version}, live "
+            f"batches {sorted(snapshot_batches)} at version {version}, live "
             f"meta has {sorted(cur_batches)} at version {cur_version} — a "
             "concurrent writer bypassed the lease; flip ABORTED (index "
             "unchanged, re-run compaction)"
@@ -765,13 +759,9 @@ def list_dir(spark: SparkSession, path: str) -> list[str]:
 
 
 def versioned_subdir(index_path: str, sub: str, version: int) -> str:
-    """Resolve an index data subtree for ``version``: version 0 is the
-    unsuffixed ``{index}/{sub}`` a freshly built index writes; each
-    compaction publishes ``{index}/{sub}_v{N}`` and flips the
-    ``version`` pointer in the index metadata (see
-    ``compact_minhash_index``) — readers resolve their scan paths
-    through the meta they loaded, so a compaction running concurrently
-    never makes their directories disappear."""
+    """An index data subtree at ``version``: the unsuffixed
+    ``{index}/{sub}`` a build writes, ``{index}/{sub}_v{N}`` after N
+    rewrites (``operators/stored_index.py``)."""
     base = index_path.rstrip("/")
     return f"{base}/{sub}" if version == 0 else f"{base}/{sub}_v{version}"
 

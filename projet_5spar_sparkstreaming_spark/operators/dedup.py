@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from projet_5spar_sparkstreaming_spark.functions.textstats import tokens
 from projet_5spar_sparkstreaming_spark.functions.textstats import doc_fingerprint
+from projet_5spar_sparkstreaming_spark.operators import stored_index as si
 
 # Deterministic salt per hash function: h_i(x) = xxhash64(x XOR salt_i).
 # XOR-salted re-hashing gives an independent-enough family without the
@@ -1924,55 +1925,19 @@ def _estimated_jaccard_pairs(
     )
 
 
-def _minhash_meta_path(index_path: str) -> str:
-    return index_path.rstrip("/") + "/_meta.json"
-
-
-def _record_store_schemas(
-    spark, index_path: str, subs, version: int = 0
-) -> dict:
-    """One-time schema inference over a freshly BUILT index's data
-    subtrees, persisted in the meta as ``schemas`` (r15): every later
-    query then passes the recorded schema to ``spark.read.schema(...)``
-    and skips the per-scan footer read + schema inference — measured
-    ~65 ms per store scan, which the streaming ingest guards pay twice
-    per micro-batch. The recorded schema self-describes whatever the
-    build wrote (including the ``batch_id`` partition column and the
-    caller's id dtype), so appends/compactions/rebuilds — which
-    preserve columns and types by construction — stay consistent with
-    it, and pre-r15 metas without the field simply keep inferring."""
-    from projet_5spar_sparkstreaming_spark.fsio import versioned_subdir
-
-    return {
-        sub: spark.read.parquet(
-            versioned_subdir(index_path, sub, version)
-        ).schema.json()
-        for sub in subs
-    }
-
-
-def _reader_with_meta_schema(spark, meta: dict | None, sub: str):
-    """``spark.read`` preloaded with the meta-recorded schema for data
-    subtree ``sub`` when one exists (see ``_record_store_schemas``)."""
-    import json as _json
-
-    from pyspark.sql import types as T
-
-    reader = spark.read
-    sch = ((meta or {}).get("schemas") or {}).get(sub)
-    if sch:
-        reader = reader.schema(T.StructType.fromJson(_json.loads(sch)))
-    return reader
+MINHASH = si.IndexSpec(
+    family="minhash",
+    meta_name="_meta.json",
+    subs=("sigs", "bands"),
+    partition_cols=("batch_id",),
+    rewrite_keys=("batch_id", "id"),
+)
 
 
 def read_minhash_meta(spark, index_path: str) -> dict | None:
     """The index's ``_meta.json`` (params + per-batch row counts), or
-    None when the index does not exist. Goes through the Hadoop
-    FileSystem abstraction (fsio) — a driver-local ``open()`` would
-    report "no index" on HDFS/S3 while the parquet data is there."""
-    from projet_5spar_sparkstreaming_spark.fsio import read_json
-
-    return read_json(spark, _minhash_meta_path(index_path))
+    None when the index does not exist (``stored_index.read_meta``)."""
+    return si.read_meta(spark, MINHASH, index_path)
 
 
 def build_minhash_index(
@@ -1986,62 +1951,30 @@ def build_minhash_index(
     batch_id: int = 0,
     precomputed_sig: DataFrame | None = None,
 ) -> None:
-    """Persist the minhash dedup index the docstrings' production
-    framing keeps promising: signatures and band buckets are
+    """Persist the minhash dedup index: signatures and band buckets are
     deterministic functions of the text, so they are computed ONCE and
-    stored — a daily incremental run then pays one scan of the new
-    batch plus a bucket equi-join against the stored bands, never a
-    re-signature of the 100 TB index.
+    stored — an incremental run then pays one scan of the new batch
+    plus a bucket equi-join against the stored bands, never a
+    re-signature of the index.
 
     Layout: ``sigs/batch_id=N/`` (id, sig) and ``bands/batch_id=N/``
-    (id, band, bucket) hive-partitioned parquet plus ``_meta.json``
-    pinning (n, num_hashes, bands) and the per-batch row counts:
-    queries read their parameters FROM the index, so
-    mismatched-parameter joins cannot happen by construction, and
-    index SIZE is a metadata lookup, never a ``count()`` over the
-    store. Grow with ``append_to_minhash_index``; bound the file count
-    with ``compact_minhash_index``. Metadata goes through the Hadoop
-    FileSystem abstraction (fsio) so the index works on object storage
-    exactly as on local disk. The meta's ``version`` field points at
-    the live data subtree (``sigs``/``bands`` for version 0,
-    ``sigs_v{N}``/``bands_v{N}`` after N compactions) — readers resolve
-    their scan paths through it."""
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        clear_build_marker,
-        delete_path,
-        set_build_marker,
-        write_json,
-        writer_lease,
+    (id, band, bucket) plus ``_meta.json`` pinning (n, num_hashes,
+    bands): queries read their parameters FROM the index, so
+    mismatched-parameter joins cannot happen by construction. Grow
+    with ``append_to_minhash_index``, bound the file count with
+    ``compact_minhash_index``. The lease, build marker, fence and
+    versioned layout are ``operators/stored_index.py``'s."""
+    si.build(
+        docs.sparkSession,
+        MINHASH,
+        index_path,
+        batch_id,
+        lambda: _write_minhash_batch(
+            docs, index_path, id_col, text_col, n, num_hashes, bands,
+            batch_id, precomputed_sig=precomputed_sig,
+        ),
+        lambda n_rows: {"n": n, "num_hashes": num_hashes, "bands": bands},
     )
-
-    spark = docs.sparkSession
-    with writer_lease(spark, index_path) as lease:
-        # crashed-build self-heal: see build_ivf_index / set_build_marker
-        set_build_marker(spark, index_path)
-        delete_path(spark, index_path)
-        with lease.guard_data_writes():
-            n_rows = _write_minhash_batch(
-                docs, index_path, id_col, text_col, n, num_hashes, bands,
-                batch_id, precomputed_sig=precomputed_sig,
-            )
-        lease.validate()  # fencing: abort, never clobber, if displaced
-        write_json(
-            spark,
-            _minhash_meta_path(index_path),
-            {
-                "n": n,
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "version": 0,
-                "batches": {str(batch_id): n_rows},
-                # r15: queries read with this schema instead of paying
-                # per-scan inference (see _record_store_schemas)
-                "schemas": _record_store_schemas(
-                    spark, index_path, ("sigs", "bands")
-                ),
-            },
-        )
-        clear_build_marker(spark, index_path)
 
 
 def _write_minhash_batch(
@@ -2057,56 +1990,25 @@ def _write_minhash_batch(
     version: int = 0,
 ) -> int:
     """Write one batch's sigs + bands into the version-``version`` data
-    subtree's ``batch_id=N`` subdirs (overwrite — a replayed batch
-    replaces itself) and return the batch's row count (O(batch), never
-    O(index)). The count rides the sigs write as an ``observe`` metric
-    — no separate count job per append/micro-batch."""
-    from pyspark.sql import Observation
-
-    from projet_5spar_sparkstreaming_spark.fsio import versioned_subdir
-
-    if precomputed_sig is not None:
-        sig, own_cache = precomputed_sig, False
-    else:
-        sig, own_cache = (
-            minhash_signature_arrow(docs, id_col, text_col, n, num_hashes).cache(),
-            True,
-        )
-    obs = Observation()
-    # REBALANCE before each write: the signature stage runs at compute
-    # parallelism (_ensure_min_parallelism), but persisting its output
-    # at that partition count writes core-count sliver files per batch
-    # — the query path then scans batches x slivers tiny parquet files
-    # and file overhead dominates (measured 16 files/833 rows). The
-    # AQE rebalance shuffle (tiny: post-signature rows only) sizes
-    # output files to the advisory partition size instead — one file
-    # for a small micro-batch, ~64MB files for a 100 GB one.
-    def _write_sigs() -> None:
-        sig.select(
-            F.col("__id").alias("id"), F.col("__sig").alias("sig")
-        ).observe(obs, F.count(F.lit(1)).alias("rows")).hint(
-            "rebalance"
-        ).write.mode("overwrite").parquet(
-            f"{versioned_subdir(index_path, 'sigs', version)}/batch_id={batch_id}"
-        )
-
-    def _write_bands() -> None:
-        _banded_buckets(sig, bands, num_hashes // bands).select(
-            F.col("__id").alias("id"), "band", "bucket"
-        ).hint("rebalance").write.mode("overwrite").parquet(
-            f"{versioned_subdir(index_path, 'bands', version)}/batch_id={batch_id}"
-        )
-
-    # r15 (guide §2.6): the two per-batch writes are independent jobs
-    # over the SAME cached signature table — running them sequentially
-    # paid two full rounds of fixed micro-batch cost (job scheduling,
-    # tiny-stage tails) per append. Overlap them: the bands write runs
-    # on a driver side thread while the sigs write runs here; total
-    # wall is max of the two, not the sum. Failure in either fails the
-    # batch (re-raised after join), which replays idempotently — both
-    # writes overwrite their own batch_id=N subdir.
-    _parallel_actions(_write_sigs, _write_bands)
-    n_rows = int(obs.get["rows"])
+    subtree's ``batch_id=N`` subdirs (``stored_index.write_batch``: both
+    writes overlap over the SAME cached signature table) and return the
+    batch's row count (O(batch), never O(index))."""
+    own_cache = precomputed_sig is None
+    sig = precomputed_sig
+    if own_cache:
+        sig = minhash_signature_arrow(docs, id_col, text_col, n, num_hashes).cache()
+    n_rows = si.write_batch(
+        index_path,
+        version,
+        batch_id,
+        {
+            "sigs": sig.select(F.col("__id").alias("id"), F.col("__sig").alias("sig")),
+            "bands": _banded_buckets(sig, bands, num_hashes // bands).select(
+                F.col("__id").alias("id"), "band", "bucket"
+            ),
+        },
+        counted="sigs",
+    )
     if own_cache:
         sig.unpersist()
     return n_rows
@@ -2120,53 +2022,20 @@ def append_to_minhash_index(
     batch_id: int,
     precomputed_sig: DataFrame | None = None,
 ) -> int:
-    """Append a new batch to an existing minhash index (the daily /
-    per-micro-batch increment): parameters come FROM the stored
-    ``_meta.json`` (they must, or bucket joins against older batches
-    would silently compare incompatible hashes), the batch's sigs and
-    bands land in their own ``batch_id=N`` subdirs (overwrite, so a
-    replayed batch replaces itself instead of duplicating), and the
-    meta's per-batch row counts gain/replace the entry. Cost is
-    O(batch): the stored index is neither read nor re-signed. Appends
-    run under the cross-process ``writer_lease`` — serialized against
-    compactions (whose version flip would silently abandon a batch
-    landed mid-rewrite) and against each other (two concurrent meta
-    updates would lose one batch's entry). Returns the batch row
-    count."""
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        clear_stale_build_marker,
-        write_json,
-        writer_lease,
-    )
+    """Append a batch to a minhash index (``stored_index.append``):
+    parameters come FROM the stored ``_meta.json`` (they must, or
+    bucket joins against older batches would compare incompatible
+    hashes); the batch's sigs and bands land in their own
+    ``batch_id=N`` subdirs. Returns the batch row count."""
 
-    spark = docs.sparkSession
-    with writer_lease(spark, index_path) as lease:
-        meta = read_minhash_meta(spark, index_path)
-        if meta is None:
-            raise FileNotFoundError(
-                f"no minhash index at {index_path} (build_minhash_index first)"
-            )
-        # committed meta + held lease: a still-present build marker is
-        # a crashed build's debris — shed it before it can misroute a
-        # later transient meta-None read into a store-eating rebuild
-        clear_stale_build_marker(spark, index_path)
-        with lease.guard_data_writes():
-            n_rows = _write_minhash_batch(
-                docs,
-                index_path,
-                id_col,
-                text_col,
-                meta["n"],
-                meta["num_hashes"],
-                meta["bands"],
-                batch_id,
-                precomputed_sig=precomputed_sig,
-                version=int(meta.get("version", 0)),
-            )
-        meta.setdefault("batches", {})[str(batch_id)] = n_rows
-        lease.validate()  # fencing: abort, never clobber, if displaced
-        write_json(spark, _minhash_meta_path(index_path), meta)
-    return n_rows
+    def write(meta: dict, version: int) -> int:
+        return _write_minhash_batch(
+            docs, index_path, id_col, text_col,
+            meta["n"], meta["num_hashes"], meta["bands"], batch_id,
+            precomputed_sig=precomputed_sig, version=version,
+        )
+
+    return si.append(docs.sparkSession, MINHASH, index_path, batch_id, write)
 
 
 def compact_minhash_index(
@@ -2176,95 +2045,14 @@ def compact_minhash_index(
     target_partitions: int | None = None,
 ) -> dict:
     """Merge an appended-to minhash index's accumulated ``batch_id=N``
-    subdirs into one compacted partition — without this, a long-lived
-    streaming ingest guard leaves thousands of tiny parquet files and
-    every query pays the listing.
-
-    The newest ``keep_last`` batches keep their own ids (a replay of
-    the latest uncommitted micro-batch must still be able to exclude
-    exactly itself via ``batch_id < N``); everything older is rewritten
-    under the MINIMUM merged batch id, which every future batch's
-    ``batch_id < current`` filter still includes — the replay-exclusion
-    semantics are preserved by construction. Query results are
-    byte-identical pre/post (test-enforced): ``minhash_query_index``
-    never looks at ``batch_id``.
-
-    READER-SAFE: the compacted data is written to fresh
-    ``sigs_v{N+1}``/``bands_v{N+1}`` sibling subtrees, then the meta's
-    ``version`` pointer flips to N+1 in one crash-safe ``write_json``
-    — a reader resolved its scan paths from the meta it loaded, so a
-    query running across the flip reads the version-N directories
-    (retained until the NEXT compaction begins) and a query planned
-    after it reads N+1; neither ever sees an absent directory, and
-    both return identical results (test-enforced). A crash before the
-    flip leaves the index live on version N with a stale N+1 tree that
-    the next compaction deletes before writing. WRITERS are
-    coordinated by the cross-process ``writer_lease`` (fsio), which
-    appends and compactions both take — plus a belt-and-braces drift
-    re-validation at flip time (``_require_no_meta_drift``) that
-    aborts the flip if a writer slipped past the lease (stale-lease
-    break, S3 create-if-absent race), so a mid-rewrite append can
-    never be silently dropped. Returns the updated meta."""
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        clean_versions_except,
-        require_no_meta_drift,
-        versioned_subdir,
-        write_json,
-        writer_lease,
-    )
-
-    with writer_lease(spark, index_path) as lease:
-        meta = read_minhash_meta(spark, index_path)
-        if meta is None:
-            raise FileNotFoundError(f"no minhash index at {index_path}")
-        from projet_5spar_sparkstreaming_spark.fsio import (
-            clear_stale_build_marker,
-        )
-
-        clear_stale_build_marker(spark, index_path)  # crashed-build debris
-        batch_ids = sorted(int(b) for b in meta.get("batches", {}))
-        merged = batch_ids[: max(0, len(batch_ids) - keep_last)]
-        if len(merged) < 2:
-            return meta  # nothing to merge
-        merged_id = min(merged)
-        version = int(meta.get("version", 0))
-        snapshot = dict(meta["batches"])  # ids AND row counts: detects replayed appends too
-        n_parts = target_partitions or spark.sparkContext.defaultParallelism
-        remap = F.when(
-            F.col("batch_id").isin(merged), F.lit(merged_id)
-        ).otherwise(F.col("batch_id"))
-        with lease.guard_data_writes():
-            for sub in ("sigs", "bands"):
-                # drop crashed next-version trees AND grace copies older
-                # than the live version — in-flight readers of the LIVE
-                # version are untouched (their grace window runs until
-                # the next compaction)
-                clean_versions_except(spark, index_path, sub, {version})
-                (
-                    spark.read.parquet(versioned_subdir(index_path, sub, version))
-                    # shed orphan batches the meta never acknowledged (a
-                    # kill -9'd append's partial data); their at-least-once
-                    # replay re-delivers them — see compact_ivf_index
-                    .filter(F.col("batch_id").isin([int(b) for b in snapshot]))
-                    .withColumn("batch_id", remap)
-                    # spread each partition value over up to n_parts tasks
-                    # by id hash: bounded file count without
-                    # one-giant-file skew
-                    .repartition(n_parts, "batch_id", "id")
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(versioned_subdir(index_path, sub, version + 1))
-                )
-        require_no_meta_drift(
-            read_minhash_meta(spark, index_path), snapshot, version, index_path
-        )
-        batches = meta["batches"]
-        merged_rows = sum(batches.pop(str(b)) for b in merged)
-        batches[str(merged_id)] = merged_rows + batches.pop(str(merged_id), 0)
-        meta["version"] = version + 1
-        lease.validate()  # fencing: abort, never clobber, if displaced
-        write_json(spark, _minhash_meta_path(index_path), meta)  # the flip
-    return meta
+    subdirs into one compacted partition (``stored_index.compact``) —
+    without it a long-lived streaming ingest guard leaves thousands of
+    tiny parquet files and every query pays the listing. The newest
+    ``keep_last`` batches keep their ids, so a replay of the latest
+    micro-batch still excludes exactly itself; results are identical
+    before and after (``minhash_query_index`` never looks at
+    ``batch_id``). Returns the updated meta."""
+    return si.compact(spark, MINHASH, index_path, keep_last, target_partitions)
 
 
 def minhash_query_index(
@@ -2298,11 +2086,8 @@ def minhash_query_index(
     i.e. millions of docs — at which point use
     ``minhash_incremental_pairs``).
 
-    ``max_batch_id_exclusive`` drops index batches with
-    ``batch_id >= `` it from BOTH scans — the replay-idempotency guard
-    for the streaming ingest path, where a crashed micro-batch may have
-    written its own rows to the index before the checkpoint committed
-    (every doc would otherwise self-match at 1.0 and be dropped).
+    ``max_batch_id_exclusive`` drops index batches >= it from BOTH
+    scans (the streaming replay guard, ``stored_index.scan``).
     ``precomputed_sig``: caller-supplied (__id, __sig) table for the
     new batch (MUST have been computed with the index's pinned params —
     the streaming guard guarantees this by reading them from the meta
@@ -2322,26 +2107,8 @@ def minhash_query_index(
     contract as ``minhash_near_dup_pairs``'s knob; default None keeps
     the exact semantics."""
     spark = new_docs.sparkSession
-    meta = read_minhash_meta(spark, index_path)
-    if meta is None:
-        raise FileNotFoundError(f"no minhash index at {index_path}")
+    meta = si.require_meta(spark, MINHASH, index_path)
     n, num_hashes, bands = meta["n"], meta["num_hashes"], meta["bands"]
-    version = int(meta.get("version", 0))
-
-    def _scan(sub: str) -> DataFrame:
-        # resolve through the loaded meta's version pointer: the data
-        # subtree this query lists stays on disk until the next
-        # compaction even if one flips the pointer mid-query; the
-        # meta-recorded schema (r15) skips per-scan footer inference
-        from projet_5spar_sparkstreaming_spark.fsio import versioned_subdir
-
-        df = _reader_with_meta_schema(spark, meta, sub).parquet(
-            versioned_subdir(index_path, sub, version)
-        )
-        if max_batch_id_exclusive is not None:
-            df = df.filter(F.col("batch_id") < F.lit(max_batch_id_exclusive))
-        return df.drop("batch_id")
-
     if precomputed_sig is not None:
         sig_new = precomputed_sig
     else:
@@ -2352,7 +2119,9 @@ def minhash_query_index(
     if broadcast_new:
         a = F.broadcast(a)
     a = a.alias("a")
-    b = _scan("bands").select(F.col("id").alias("__id"), "band", "bucket")
+    b = si.scan(spark, index_path, meta, "bands", max_batch_id_exclusive).select(
+        F.col("id").alias("__id"), "band", "bucket"
+    )
     if max_bucket_size is not None:
         # over-cap (band,bucket) keys are rare by construction (random
         # hash buckets; only pathological boilerplate makes one), so
@@ -2378,7 +2147,7 @@ def minhash_query_index(
     if not verify:
         return cand
     sa = sig_new.select(F.col("__id").alias("id_a"), F.col("__sig").alias("__siga"))
-    sb = _scan("sigs").select(
+    sb = si.scan(spark, index_path, meta, "sigs", max_batch_id_exclusive).select(
         F.col("id").alias("id_b"), F.col("sig").alias("__sigb")
     )
     return _estimated_jaccard_pairs(

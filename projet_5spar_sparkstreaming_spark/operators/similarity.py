@@ -27,6 +27,8 @@ from projet_5spar_sparkstreaming_spark.functions.vectors import (
     cosine_from_norms,
     l2_norm,
 )
+from projet_5spar_sparkstreaming_spark import fsio
+from projet_5spar_sparkstreaming_spark.operators import stored_index as si
 from projet_5spar_sparkstreaming_spark.operators.dedup import _ensure_min_parallelism
 from projet_5spar_sparkstreaming_spark.operators.topk import top_k_per_group
 
@@ -566,36 +568,19 @@ def build_ivf_index(
     expected_rows: int | None = None,
 ) -> int:
     """Persist an IVF index: the corpus cell-assigned and written as
-    parquet PARTITIONED BY (cell, batch_id) under the ``data`` subtree
-    (``data_v{N}`` after N compactions — the meta's ``version`` field
-    points readers at the live one), plus the quantizer in
-    ``_centroids.json``. Build once, query many — ``query_ivf_index``
-    reads only the probed cells via static partition pruning, so a
-    query against a 100 TB index scans n_probe cells, not the corpus.
-    Centroids are seed-deterministic: rebuilds produce the identical
-    index. Metadata goes through the Hadoop FileSystem abstraction
-    (fsio), so the index works on object storage exactly as on local
-    disk.
+    parquet PARTITIONED BY (cell, batch_id) under the ``data`` subtree,
+    plus the quantizer in ``_centroids.json``. Build once, query many —
+    ``query_ivf_index`` reads only the probed cells, so a query against
+    a 100 TB index scans n_probe cells, not the corpus. Centroids are
+    seed-deterministic: rebuilds produce the identical index.
 
-    Lifecycle: grow with ``append_to_ivf_index`` (new batches are
-    assigned with the STORED quantizer — standard IVF practice; the
-    per-batch row counts in the metadata make the
-    rebuild-when-the-corpus-outgrows-the-quantizer decision
-    mechanical), bound small files with ``compact_ivf_index``.
-    Returns the cell count."""
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        clear_build_marker,
-        delete_path,
-        set_build_marker,
-        write_json,
-        writer_lease,
-    )
-
-    spark = corpus.sparkSession
-    # ``expected_rows`` sizes the quantizer for the corpus the index
-    # will GROW to (streaming build-then-append: cells are pinned at
-    # build, like the embed guard's expected_index_rows), instead of
-    # the seed batch's own count
+    ``expected_rows`` sizes the quantizer for the corpus the index will
+    GROW to (cells are pinned at build) and is recorded as
+    ``sized_for_rows``, the denominator of ``needs_ivf_rebuild``. Grow
+    with ``append_to_ivf_index``, bound small files with
+    ``compact_ivf_index``, retrain with ``rebuild_ivf_index``; the
+    shared lifecycle is ``operators/stored_index.py``'s. Returns the
+    cell count."""
     if n_centroids == "auto" and expected_rows is not None:
         n_centroids = auto_ivf_centroids(int(expected_rows))
     # the quantizer training pays a count + a sample collect and the
@@ -605,36 +590,29 @@ def build_ivf_index(
     cent = _train_ivf_centroids(
         corpus, corpus_id, corpus_vec, n_centroids, kmeans_iters, sample_limit
     )
-    with writer_lease(spark, index_path) as lease:
-        # marker BEFORE the delete, cleared only after the meta lands:
-        # a crash anywhere in between leaves data-without-meta UNDER the
-        # marker, which require_index_meta_consistent treats as a
-        # crashed never-acknowledged build (rebuildable on replay)
-        # instead of wedging the retry loop
-        set_build_marker(spark, index_path)
-        delete_path(spark, index_path)
-        with lease.guard_data_writes():
-            n_rows = _write_ivf_batch(
-                corpus, index_path, corpus_id, corpus_vec, cent, batch_id
-            )
-        corpus.unpersist()
-        lease.validate()  # fencing: abort, never clobber, if displaced
-        write_json(
-            spark,
-            index_path.rstrip("/") + "/_centroids.json",
-            {
-                "centroids": cent.tolist(),
-                "version": 0,
-                "batches": {str(batch_id): n_rows},
-                # what the quantizer was SIZED for — the denominator of
-                # the rebuild-when-outgrown policy (needs_ivf_rebuild)
-                "sized_for_rows": int(expected_rows)
-                if expected_rows is not None
-                else n_rows,
-            },
-        )
-        clear_build_marker(spark, index_path)
+    si.build(
+        corpus.sparkSession,
+        IVF,
+        index_path,
+        batch_id,
+        lambda: _write_ivf_batch(
+            corpus, index_path, corpus_id, corpus_vec, cent, batch_id
+        ),
+        lambda n_rows: dict(
+            centroids=cent.tolist(),
+            sized_for_rows=n_rows if expected_rows is None else int(expected_rows),
+        ),
+    )
+    corpus.unpersist()
     return len(cent)
+
+
+def _stored_cell_rows(vecs, cent, id_col, vec_col, passthrough=()) -> DataFrame:
+    """``_assign_ivf_cells`` output in the store's (id, cell, vec) layout."""
+    return _assign_ivf_cells(vecs, cent, id_col, vec_col, passthrough).select(
+        F.col("__cid").alias("id"), F.col("__cell").alias("cell"),
+        F.col("__cv").alias("vec"), *passthrough,
+    )
 
 
 def _ivf_data_dir(spark, index_path: str, version: int) -> str:
@@ -645,18 +623,25 @@ def _ivf_data_dir(spark, index_path: str, version: int) -> str:
     when version 0's ``{index}/data`` subtree is absent but the root
     holds ``cell=`` dirs, resolve to the root so pre-existing indexes
     keep querying/appending/compacting without a rebuild (r8 advice)."""
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        list_dir,
-        path_exists,
-        versioned_subdir,
-    )
-
-    p = versioned_subdir(index_path, "data", version)
-    if version == 0 and not path_exists(spark, p):
+    p = fsio.versioned_subdir(index_path, "data", version)
+    if version == 0 and not fsio.path_exists(spark, p):
         base = index_path.rstrip("/")
-        if any(n.startswith("cell=") for n in list_dir(spark, base)):
+        if any(n.startswith("cell=") for n in fsio.list_dir(spark, base)):
             return base
     return p
+
+
+IVF = si.IndexSpec(
+    family="IVF",
+    meta_name="_centroids.json",
+    subs=("data",),
+    partition_cols=("cell", "batch_id"),
+    rewrite_keys=("cell", "batch_id"),
+    dim=lambda meta: len((meta.get("centroids") or [[]])[0]),
+    data_dir=lambda spark, index_path, sub, version: _ivf_data_dir(
+        spark, index_path, version
+    ),
+)
 
 
 def _write_ivf_batch(
@@ -679,12 +664,7 @@ def _write_ivf_batch(
 
     obs = Observation()
     assigned = (
-        _assign_ivf_cells(vecs, cent, id_col, vec_col)
-        .select(
-            F.col("__cid").alias("id"),
-            F.col("__cell").alias("cell"),
-            F.col("__cv").alias("vec"),
-        )
+        _stored_cell_rows(vecs, cent, id_col, vec_col)
         .withColumn("batch_id", F.lit(int(batch_id)))
         .observe(obs, F.count(F.lit(1)).alias("rows"))
         # REBALANCE on the hive-partition keys: each task otherwise
@@ -709,45 +689,34 @@ def append_to_ivf_index(
     vec_col: str = "embedding",
     batch_id: int = 1,
 ) -> int:
-    """Append a batch to a stored IVF index: vectors are cell-assigned
-    with the STORED quantizer (one Arrow pass over the batch — the
-    index is neither read nor re-assigned) and land in their own
-    (cell, batch_id) partitions, so replays replace themselves.
-    Queries see the union immediately; partition pruning is unchanged
-    (``cell`` stays the leading partition column). Cells grow with the
-    corpus under a fixed quantizer — per-batch counts accumulate in
-    ``_centroids.json`` so callers can trigger a rebuild (which
-    retrains centroids) when the index outgrows its cell geometry
-    (~4x is the usual rule). Returns the batch row count."""
-    import numpy as np
+    """Append a batch to a stored IVF index (``stored_index.append``):
+    vectors are cell-assigned with the STORED quantizer (one Arrow pass
+    over the batch — the index is neither read nor re-assigned) and
+    land in their own (cell, batch_id) partitions, so replays replace
+    themselves. Cells grow with the corpus under the fixed quantizer
+    until ``needs_ivf_rebuild`` says to retrain. Returns the batch row
+    count."""
 
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        clear_stale_build_marker,
-        read_json,
-        write_json,
-        writer_lease,
-    )
-
-    spark = vecs.sparkSession
-    meta_path = index_path.rstrip("/") + "/_centroids.json"
-    with writer_lease(spark, index_path) as lease:
-        meta = read_json(spark, meta_path)
-        if meta is None:
-            raise FileNotFoundError(f"no IVF index at {index_path}")
-        # committed meta + held lease: a still-present build marker is
-        # a crashed build's debris — shed it before it can misroute a
-        # later transient meta-None read into a store-eating rebuild
-        clear_stale_build_marker(spark, index_path)
+    def write(meta: dict, version: int) -> int:
         cent = np.array(meta["centroids"], dtype=np.float64)
-        with lease.guard_data_writes():
-            n_rows = _write_ivf_batch(
-                vecs, index_path, id_col, vec_col, cent, batch_id,
-                version=int(meta.get("version", 0)),
-            )
-        meta.setdefault("batches", {})[str(batch_id)] = n_rows
-        lease.validate()  # fencing: abort, never clobber, if displaced
-        write_json(spark, meta_path, meta)
-    return n_rows
+        return _write_ivf_batch(
+            vecs, index_path, id_col, vec_col, cent, batch_id, version=version
+        )
+
+    return si.append(vecs.sparkSession, IVF, index_path, batch_id, write)
+
+
+def _backfill_sized_for_rows(meta: dict) -> None:
+    """LEGACY metas predate ``sized_for_rows``, and after a merge the
+    min-batch count is a sum of many batches. Estimate it by inverting
+    ``auto_ivf_centroids`` (cells ~ sqrt(n)/4) at the stored cell count,
+    CLAMPED to the store's current total: the inversion assumes an
+    auto-derived cell count, and an explicit or capped one (4096 cells
+    inverts to ~268M rows) would suppress the rebuild trigger
+    indefinitely. An underestimate merely re-arms the trigger early."""
+    if "sized_for_rows" not in meta:
+        inverted = (4 * len(meta["centroids"])) ** 2
+        meta["sized_for_rows"] = max(1, min(inverted, si.stored_rows(meta)))
 
 
 def compact_ivf_index(
@@ -757,127 +726,23 @@ def compact_ivf_index(
     target_partitions: int | None = None,
 ) -> dict:
     """Small-file compaction for an appended-to IVF index — same
-    contract as ``compact_minhash_index``: newest ``keep_last`` batches
-    keep their ids, older ones merge under the minimum merged id;
-    query results identical pre/post (test-enforced). READER-SAFE via
-    versioned subtrees: the compacted ``data_v{N+1}`` tree is fully
-    written next to the live one, then the meta's ``version`` pointer
-    flips in one crash-safe ``write_json``; concurrent readers keep
-    the version-N tree (retained until the next compaction). The
-    quantizer file sits outside the data trees and is untouched.
-    Writers coordinate via the cross-process ``writer_lease`` plus the
-    flip-time drift guard (see ``compact_minhash_index``). Returns
-    the updated meta."""
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        clean_versions_except,
-        read_json,
-        require_no_meta_drift,
-        versioned_subdir,
-        write_json,
-        writer_lease,
-    )
+    contract as ``compact_minhash_index`` (``stored_index.compact``);
+    the quantizer inside the meta is untouched. A legacy root-layout
+    index migrates into ``data_v1`` and its retired root ``cell=*``
+    dirs are dropped after the flip (no grace copy: that layout
+    predates reader-safe versioning). Returns the updated meta."""
 
-    meta_path = index_path.rstrip("/") + "/_centroids.json"
-    with writer_lease(spark, index_path) as lease:
-        meta = read_json(spark, meta_path)
-        if meta is None:
-            raise FileNotFoundError(f"no IVF index at {index_path}")
-        from projet_5spar_sparkstreaming_spark.fsio import (
-            clear_stale_build_marker,
-        )
-
-        clear_stale_build_marker(spark, index_path)  # crashed-build debris
-        batch_ids = sorted(int(b) for b in meta.get("batches", {}))
-        merged = batch_ids[: max(0, len(batch_ids) - keep_last)]
-        if len(merged) < 2:
-            return meta
-        merged_id = min(merged)
-        version = int(meta.get("version", 0))
-        snapshot = dict(meta["batches"])  # ids AND row counts: detects replayed appends too
-        n_parts = target_partitions or spark.sparkContext.defaultParallelism
-        remap = F.when(
-            F.col("batch_id").isin(merged), F.lit(merged_id)
-        ).otherwise(F.col("batch_id"))
-        clean_versions_except(spark, index_path, "data", {version})
-        live_dir = _ivf_data_dir(spark, index_path, version)
-        legacy_root = version == 0 and live_dir == index_path.rstrip("/")
-        from projet_5spar_sparkstreaming_spark.session import (
-            scoped_conf,
-            wide_vector_reader_capacity,
-        )
-
-        # whole-store wide-vector rewrite: scope the reader batch size
-        # (dim from the stored centroids; see wide_vector_reader_capacity)
-        cents = meta.get("centroids") or []
-        cap = wide_vector_reader_capacity(len(cents[0]) if cents else 0)
-        confs = (
-            {"spark.sql.parquet.columnarReaderBatchSize": cap}
-            if cap is not None
-            else {}
-        )
-        with scoped_conf(spark, confs), lease.guard_data_writes():
-            (
-                spark.read.parquet(live_dir)
-                # drop ORPHAN rows: a writer kill -9'd between its batch
-                # data landing and its meta update leaves (cell, batch)
-                # partitions the meta never acknowledged — uncommitted
-                # garbage whose at-least-once replay re-delivers the
-                # batch (possibly under a different quantizer, where
-                # dynamic overwrite could no longer replace the stale
-                # cells). The whole-store rewrite is the place to shed
-                # them so the new tree matches the meta exactly.
-                .filter(F.col("batch_id").isin([int(b) for b in snapshot]))
-                .withColumn("batch_id", remap)
-                .repartition(n_parts, "cell", "batch_id")
-                .write.mode("overwrite")
-                .partitionBy("cell", "batch_id")
-                .parquet(versioned_subdir(index_path, "data", version + 1))
-            )
-        require_no_meta_drift(
-            read_json(spark, meta_path), snapshot, version, index_path
-        )
-        batches = meta["batches"]
-        merged_rows = sum(batches.pop(str(b)) for b in merged)
-        batches[str(merged_id)] = merged_rows + batches.pop(str(merged_id), 0)
-        meta["version"] = version + 1
-        if "sized_for_rows" not in meta:
-            # LEGACY backfill (r12 advice): pre-field metas can't say
-            # what the quantizer was sized for, and after THIS merge
-            # the min-batch count would be a sum of many batches —
-            # estimate by inverting auto_ivf_centroids (cells ~
-            # sqrt(n)/4) at the stored cell count, so needs_ivf_rebuild
-            # regains a denominator that reflects the geometry's
-            # actual capacity. CLAMPED to the store's current total
-            # (r13 ADVICE): the inversion assumes the cell count was
-            # auto-derived, but a legacy index built with an explicit
-            # n_centroids — or sitting at the 4096 cap, where the
-            # inversion yields a ~268M-row denominator — would have its
-            # rebuild trigger suppressed indefinitely. The quantizer
-            # can never have been sized for MORE rows than the store
-            # holds at this compaction, so the total is a sound upper
-            # bound; an underestimate merely re-arms the trigger early
-            # (a wasted rebuild at worst, never a wrong answer).
-            total_now = sum(int(v) for v in batches.values())
-            inverted = (4 * len(meta["centroids"])) ** 2
-            meta["sized_for_rows"] = max(1, min(inverted, total_now))
-        lease.validate()  # fencing: abort, never clobber, if displaced
-        write_json(spark, meta_path, meta)  # the flip
-        if legacy_root:
-            # migrating off the pre-versioning ROOT layout: the retired
-            # cell=* dirs sit next to _centroids.json where
-            # clean_versions_except can't name them — drop them now (no
-            # grace copy: the legacy layout predates reader-safe
-            # versioning, so its readers never had one)
-            from projet_5spar_sparkstreaming_spark.fsio import (
-                delete_path,
-                list_dir,
-            )
-
-            base = index_path.rstrip("/")
-            for name in list_dir(spark, base):
+    def retire_legacy_root(old_version: int) -> None:
+        base = index_path.rstrip("/")
+        if old_version == 0:
+            for name in fsio.list_dir(spark, base):
                 if name.startswith("cell="):
-                    delete_path(spark, f"{base}/{name}")
-    return meta
+                    fsio.delete_path(spark, f"{base}/{name}")
+
+    return si.compact(
+        spark, IVF, index_path, keep_last, target_partitions,
+        before_flip=_backfill_sized_for_rows, after_flip=retire_legacy_root,
+    )
 
 
 def rebuild_ivf_index(
@@ -889,113 +754,28 @@ def rebuild_ivf_index(
     target_partitions: int | None = None,
 ) -> dict:
     """RETRAIN a grown IVF index's quantizer from its own stored
-    vectors — the mechanical step the append path's docs defer to
-    ("rebuild when the corpus outgrows its cell geometry ~4x"). Appends
-    assign with the quantizer pinned at build, so cells grow with the
-    corpus and probe cost with them; the per-batch counts in the meta
-    say when, this says how, and no caller has to keep the raw corpus
-    around: the stored ``(id, vec)`` rows ARE the corpus.
+    vectors (``stored_index.rebuild``) — appends assign with the
+    quantizer pinned at build, so cells grow with the corpus and probe
+    cost with them; ``needs_ivf_rebuild`` says when, this says how, and
+    no caller has to keep the raw corpus: the stored ``(id, vec)`` rows
+    ARE the corpus. New centroids (``"auto"`` sized from the stored
+    total) re-assign every vector into the next version with
+    ``batch_id`` carried through; (centroids, version) flip in one meta
+    write and ``sized_for_rows`` restarts at the current total. Returns
+    the updated meta."""
 
-    Behavior note: resets ``sized_for_rows`` to the store's current
-    total, so the rebuild-when-outgrown clock restarts here.
+    def retrain(meta, stored, total_rows, write) -> dict:
+        cells = auto_ivf_centroids(total_rows) if n_centroids == "auto" else n_centroids
+        cent = _train_ivf_centroids(
+            stored, "id", "vec", cells, kmeans_iters, sample_limit
+        )
+        # batch_id rides THROUGH the assignment pass, never re-joined
+        # on id: at-least-once upstreams deliver one id in two batches,
+        # and an id equi-join would fan those rows out on every rebuild
+        write("data", _stored_cell_rows(stored, cent, "id", "vec", ("batch_id",)))
+        return {"centroids": cent.tolist()}
 
-    Reader-safe like compaction: new centroids are trained (k-means on
-    a bounded sample, ``n_centroids="auto"`` sized from the meta's
-    total row count), ALL stored vectors are re-assigned and rewritten
-    under ``data_v{N+1}`` — ``batch_id`` values preserved verbatim, so
-    streaming replay exclusion and per-batch meta counts survive the
-    rebuild — and the meta's (centroids, version) pair flips in one
-    crash-safe ``write_json``: a concurrent reader holds EITHER the old
-    centroids with the old tree OR the new with the new, never a mix
-    (the quantizer lives inside the meta precisely so this flip is
-    atomic). Serialized against appends/compactions by the writer
-    lease; the flip-time drift guard aborts if a replayed append
-    changed any batch under us. Returns the updated meta."""
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        clean_versions_except,
-        read_json,
-        require_no_meta_drift,
-        versioned_subdir,
-        write_json,
-        writer_lease,
-    )
-    from projet_5spar_sparkstreaming_spark.session import (
-        scoped_conf,
-        wide_vector_reader_capacity,
-    )
-
-    meta_path = index_path.rstrip("/") + "/_centroids.json"
-    with writer_lease(spark, index_path) as lease:
-        meta = read_json(spark, meta_path)
-        if meta is None:
-            raise FileNotFoundError(f"no IVF index at {index_path}")
-        from projet_5spar_sparkstreaming_spark.fsio import (
-            clear_stale_build_marker,
-        )
-
-        clear_stale_build_marker(spark, index_path)  # crashed-build debris
-        version = int(meta.get("version", 0))
-        snapshot = dict(meta["batches"])
-        total_rows = sum(int(v) for v in snapshot.values())
-        if n_centroids == "auto":
-            n_centroids = auto_ivf_centroids(total_rows)
-        n_parts = target_partitions or spark.sparkContext.defaultParallelism
-        clean_versions_except(spark, index_path, "data", {version})
-        live_dir = _ivf_data_dir(spark, index_path, version)
-        old_cents = meta.get("centroids") or []
-        cap = wide_vector_reader_capacity(
-            len(old_cents[0]) if old_cents else 0
-        )
-        confs = (
-            {"spark.sql.parquet.columnarReaderBatchSize": cap}
-            if cap is not None
-            else {}
-        )
-        with scoped_conf(spark, confs), lease.guard_data_writes():
-            stored = (
-                spark.read.option("basePath", live_dir)
-                .parquet(live_dir)
-                # shed orphan batches the meta never acknowledged (a
-                # kill -9'd append's partial data) — see the twin
-                # filter in compact_ivf_index; their replay re-delivers
-                .filter(F.col("batch_id").isin([int(b) for b in snapshot]))
-                .select("id", "vec", "batch_id")
-                .cache()
-            )
-            cent = _train_ivf_centroids(
-                stored, "id", "vec", n_centroids, kmeans_iters, sample_limit
-            )
-            # batch_id rides THROUGH the assignment pass (passthrough
-            # column), never re-joined on id: at-least-once upstreams
-            # legally deliver one id in two batches, and an id equi-join
-            # here would fan those rows out 2x2 on every rebuild —
-            # silently inflating the store and desyncing the per-batch
-            # meta counts that are preserved verbatim below
-            assigned = _assign_ivf_cells(
-                stored, cent, "id", "vec", passthrough=("batch_id",)
-            ).select(
-                F.col("__cid").alias("id"),
-                F.col("__cell").alias("cell"),
-                F.col("__cv").alias("vec"),
-                "batch_id",
-            )
-            (
-                assigned.repartition(n_parts, "cell", "batch_id")
-                .write.mode("overwrite")
-                .partitionBy("cell", "batch_id")
-                .parquet(versioned_subdir(index_path, "data", version + 1))
-            )
-            stored.unpersist()
-        require_no_meta_drift(
-            read_json(spark, meta_path), snapshot, version, index_path
-        )
-        meta["centroids"] = cent.tolist()
-        meta["version"] = version + 1
-        # the retrained quantizer is sized for the store as it stands
-        meta["sized_for_rows"] = total_rows
-        lease.validate()  # fencing: abort, never clobber, if displaced
-        write_json(spark, meta_path, meta)  # the flip
-    return meta
+    return si.rebuild(spark, IVF, index_path, "data", retrain, target_partitions)
 
 
 def needs_ivf_rebuild(meta: dict | None, growth_factor: float = 4.0) -> bool:
@@ -1009,21 +789,13 @@ def needs_ivf_rebuild(meta: dict | None, growth_factor: float = 4.0) -> bool:
     ``expected_rows`` when given, else the seed batch's count) and
     reset by every rebuild.
 
-    LEGACY metas (persisted before the field existed) return False
-    explicitly: the old min-batch-count fallback broke after a
-    compaction — the surviving merged batch's count is the SUM of many
-    batches, so the inferred sizing was inflated and the trigger
-    suppressed or wildly delayed (r12 advice). Rather than guess from
-    corrupted evidence, the predicate declines until the next
-    ``compact_ivf_index``/``rebuild_ivf_index`` backfills the field
-    (compaction estimates it by inverting ``auto_ivf_centroids`` at
-    the stored cell count; rebuild stamps the retrain total)."""
-    if meta is None:
-        return False
-    batches = meta.get("batches") or {}
-    total = sum(int(v) for v in batches.values())
-    sized_for = meta.get("sized_for_rows")
-    return bool(sized_for) and total >= growth_factor * int(sized_for)
+    LEGACY metas (persisted before the field existed) return False:
+    after a compaction the min-batch count is a sum of many batches, so
+    any sizing inferred from it is inflated. The predicate declines
+    until the next compaction (``_backfill_sized_for_rows``) or rebuild
+    stamps the field."""
+    sized_for = (meta or {}).get("sized_for_rows")
+    return bool(sized_for) and si.stored_rows(meta) >= growth_factor * int(sized_for)
 
 
 def query_ivf_index(
@@ -1060,38 +832,22 @@ def query_ivf_index(
     vs brute 12.5-17.6 s at 5M; 9-19 s vs 112-131 s at 50M — see
     ``tools/ivf_crossover.py``, IVF_CROSSOVER_r11.json).
 
-    **BEHAVIOR CHANGE (r12)** — defaults flipped from
-    ``route="ivf", n_probe=4`` to ``route="auto", n_probe="auto"``:
-    a bare call on a store at or under ``brute_cutoff_rows`` (2M) now
-    EXACT-scans instead of probing (different plan, recall 1.0 instead
-    of approximate), and any auto-probed call widens its probe set as
-    the store grows. Callers that pinned behavior on the old defaults
-    must now pass ``route="ivf", n_probe=4`` explicitly. The flip
-    ships the measured findings (r11/r12 crossover + scale-stress
-    artifacts): ``route="auto"`` picks the measured winner by store
-    size, and ``n_probe="auto"`` probes a constant FRACTION of the
-    cells — a fixed width erodes recall as cells grow (measured
-    0.996 -> 0.874 going 5M -> 50M rows at n_probe=4), which is why
-    ``route="ivf"`` without an explicit ``n_probe`` gets the auto
-    width rather than the old fixed 4. Benchmarks measuring the probe
-    path itself pin both knobs."""
-    import numpy as np
+    The ``route="auto", n_probe="auto"`` defaults replaced
+    ``route="ivf", n_probe=4`` (see MIGRATION.md); benchmarks measuring
+    the probe path itself pin both knobs."""
     from pyspark.sql import types as T
 
-    from projet_5spar_sparkstreaming_spark.fsio import read_json
-
-    meta = read_json(spark, index_path.rstrip("/") + "/_centroids.json")
-    if meta is None:
-        raise FileNotFoundError(f"no IVF index at {index_path}")
+    meta = si.require_meta(spark, IVF, index_path)
     cent = np.array(meta["centroids"], dtype=np.float64)
     if route not in ("ivf", "brute", "auto"):
         raise ValueError(f"route must be ivf|brute|auto, got {route!r}")
     if route == "auto":
-        store_rows = sum(int(v) for v in (meta.get("batches") or {}).values())
-        route = "brute" if store_rows <= brute_cutoff_rows else "ivf"
+        route = "brute" if si.stored_rows(meta) <= brute_cutoff_rows else "ivf"
+    data_dir = _ivf_data_dir(spark, index_path, int(meta.get("version", 0)))
+    # the meta-recorded schema skips per-scan footer inference
+    reader = si.reader(spark, meta, "data").option("basePath", data_dir)
     if route == "brute":
-        data_dir = _ivf_data_dir(spark, index_path, int(meta.get("version", 0)))
-        stored = spark.read.option("basePath", data_dir).parquet(data_dir)
+        stored = reader.parquet(data_dir)
         return brute_force_top_k_arrow(
             queries,
             stored,
@@ -1130,7 +886,6 @@ def query_ivf_index(
     q_probes = spark.createDataFrame(probe_rows, probe_schema)
 
     probed_cells = sorted({c for _, c, _ in probe_rows})
-    data_dir = _ivf_data_dir(spark, index_path, int(meta.get("version", 0)))
     # Probe-bounded LISTING, not just probe-bounded reading: a plain
     # read.parquet(data_dir) discovers the ENTIRE cell=* partition tree
     # before pruning, so probe cost grows with the number of cells even
@@ -1149,7 +904,6 @@ def query_ivf_index(
         if n.startswith("cell=")
     }
     cell_paths = [f"{data_dir}/cell={c}" for c in probed_cells if c in existing]
-    reader = spark.read.option("basePath", data_dir)
     index = (
         (reader.parquet(*cell_paths) if cell_paths else reader.parquet(data_dir))
         .filter(F.col("cell").isin(probed_cells))
@@ -1816,17 +1570,21 @@ def cosine_incremental_pairs(
     return _cosine_verify_arrow(joined, threshold)
 
 
-def _embed_meta_path(index_path: str) -> str:
-    return index_path.rstrip("/") + "/_meta.json"
+EMBED_LSH = si.IndexSpec(
+    family="embedding LSH",
+    meta_name="_meta.json",
+    subs=("buckets", "vecs"),
+    partition_cols=("batch_id",),
+    rewrite_keys=("batch_id", "id"),
+    dim=lambda meta: int(meta.get("dim") or 0),
+)
 
 
 def read_embed_lsh_meta(spark, index_path: str) -> dict | None:
     """The embedding index's ``_meta.json`` (pinned LSH params +
-    per-batch row counts), or None when absent. Hadoop-FS-backed (fsio)
-    so existence checks agree with wherever the parquet lives."""
-    from projet_5spar_sparkstreaming_spark.fsio import read_json
-
-    return read_json(spark, _embed_meta_path(index_path))
+    per-batch row counts), or None when absent
+    (``stored_index.read_meta``)."""
+    return si.read_meta(spark, EMBED_LSH, index_path)
 
 
 def _write_embed_batch(
@@ -1842,47 +1600,20 @@ def _write_embed_batch(
 ) -> int:
     """One batch's (id, bucket) rows + raw vectors into the
     version-``version`` data subtree's ``batch_id=N`` subdirs
-    (overwrite — replays replace themselves). Returns the batch row
-    count, ridden on the vecs write as an ``observe`` metric — the
-    input plan executes twice (bucket pass + vecs copy), never a third
-    time for a count job."""
-    from pyspark.sql import Observation
-
-    from projet_5spar_sparkstreaming_spark.fsio import versioned_subdir
-
-    buckets = _lsh_buckets_arrow(
-        vecs, id_col, vec_col, "id", n_planes, n_tables, dim
+    (``stored_index.write_batch``: the bucket pass and the vecs copy
+    overlap over the same input). Returns the batch row count."""
+    return si.write_batch(
+        index_path,
+        version,
+        batch_id,
+        {
+            "buckets": _lsh_buckets_arrow(
+                vecs, id_col, vec_col, "id", n_planes, n_tables, dim
+            ),
+            "vecs": vecs.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+        },
+        counted="vecs",
     )
-    obs = Observation()
-    kept = vecs.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-
-    # REBALANCE before each write: without it every batch writes one
-    # file per compute partition (core-count slivers), and the stored-
-    # index query pays per-file overhead over batches x slivers files.
-    # AQE sizes the rebalanced output to the advisory partition size.
-    def _write_buckets() -> None:
-        buckets.hint("rebalance").write.mode("overwrite").parquet(
-            f"{versioned_subdir(index_path, 'buckets', version)}/batch_id={batch_id}"
-        )
-
-    def _write_vecs() -> None:
-        kept.observe(obs, F.count(F.lit(1)).alias("rows")).hint(
-            "rebalance"
-        ).write.mode("overwrite").parquet(
-            f"{versioned_subdir(index_path, 'vecs', version)}/batch_id={batch_id}"
-        )
-
-    # r15 (guide §2.6): the bucket pass and the vecs copy are
-    # independent jobs over the same input — overlapped on driver
-    # threads so a micro-batch append pays one round of fixed job cost,
-    # not two (see dedup._parallel_actions; failure fails the batch and
-    # the replay overwrites both batch_id=N subdirs idempotently).
-    from projet_5spar_sparkstreaming_spark.operators.dedup import (
-        _parallel_actions,
-    )
-
-    _parallel_actions(_write_buckets, _write_vecs)
-    return int(obs.get["rows"])
 
 
 def build_embed_lsh_index(
@@ -1900,81 +1631,47 @@ def build_embed_lsh_index(
 ) -> dict:
     """Persist a sign-LSH embedding near-dup index: ``buckets/
     batch_id=N/`` (id, per-table packed bucket) and ``vecs/batch_id=N/``
-    (id, vec) hive-partitioned parquet plus ``_meta.json`` pinning
-    (n_planes, n_tables, dim) and per-batch row counts. Hyperplanes are
-    seed-deterministic (``_hyperplanes``), so stored buckets and any
-    later query's buckets agree by construction — queries bucketize
-    only THEIR side and equi-join the store.
+    (id, vec) plus ``_meta.json`` pinning (n_planes, n_tables, dim).
+    Hyperplanes are seed-deterministic (``_hyperplanes``), so stored
+    buckets and any later query's buckets agree by construction —
+    queries bucketize only THEIR side and equi-join the store.
 
-    LSH parameters must be pinned once for the life of the index
-    (stored bucket ids depend on them), so ``"auto"`` sizes them from
+    LSH parameters are pinned for the life of the index (stored bucket
+    ids depend on them), so ``"auto"`` sizes them from
     ``expected_rows`` — the index size you intend to GROW to — falling
-    back to 1024x the seed batch when unset. Oversizing is cheap:
-    planes scale ~log2(n), and ``auto_lsh_params`` compensates recall
-    with tables at whatever plane count results. When the corpus
-    outgrows the sizing by another ~2^10, rebuild (parameters live in
-    the meta precisely so a rebuild is mechanical). Returns the meta."""
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        clear_build_marker,
-        delete_path,
-        set_build_marker,
-        write_json,
-        writer_lease,
-    )
-
-    spark = vecs.sparkSession
-    own_cache = False
-    if (n_planes == "auto" or n_tables == "auto") and expected_rows is None:
-        # the sizing count forces an extra scan of the input — cache it
-        # so the two index writes below read the materialized batch
+    back to 1024x the seed batch when unset. The sizing and the recall
+    targets it was derived under are recorded for
+    ``needs_embed_lsh_rebuild``/``rebuild_embed_lsh_index``. The shared
+    lifecycle is ``operators/stored_index.py``'s. Returns the meta."""
+    auto = n_planes == "auto" or n_tables == "auto"
+    # the sizing count forces an extra scan of the input — cache it so
+    # the two index writes below read the materialized batch
+    own_cache = auto and expected_rows is None
+    if own_cache:
         vecs = vecs.cache()
-        own_cache = True
     sized_for = expected_rows
-    if n_planes == "auto" or n_tables == "auto":
+    if auto:
         sized_for = expected_rows or max(vecs.count(), 1) * 1024
         n_planes, n_tables = auto_lsh_params(
             sized_for, dim=dim, recall_at=recall_at, target_recall=target_recall
         )
-    with writer_lease(spark, index_path) as lease:
-        # crashed-build self-heal: see build_ivf_index / set_build_marker
-        set_build_marker(spark, index_path)
-        delete_path(spark, index_path)
-        with lease.guard_data_writes():
-            n_rows = _write_embed_batch(
-                vecs, index_path, id_col, vec_col, n_planes, n_tables, dim,
-                batch_id,
-            )
-        if own_cache:
-            vecs.unpersist()
-        meta = {
-            "n_planes": int(n_planes),
-            "n_tables": int(n_tables),
-            "dim": dim,
-            "version": 0,
-            "batches": {str(batch_id): n_rows},
-            # what the LSH parameters were SIZED for — the basis of the
-            # rebuild-when-outgrown policy (needs_embed_lsh_rebuild)
-            "sized_for_rows": int(sized_for) if sized_for else n_rows,
-            # the recall sizing the params were derived UNDER — the
-            # rebuild predicate and the rebuild itself must re-derive
-            # with the SAME sizing, or a build at recall_at=0.995 gets
-            # judged (and silently re-sized) at the 0.99 default
-            # (r12 advice)
-            "recall_at": float(recall_at),
-            "target_recall": float(target_recall),
-        }
-        # r15: queries read with this schema instead of paying per-scan
-        # inference (see dedup._record_store_schemas)
-        from projet_5spar_sparkstreaming_spark.operators.dedup import (
-            _record_store_schemas,
-        )
-
-        meta["schemas"] = _record_store_schemas(
-            spark, index_path, ("buckets", "vecs")
-        )
-        lease.validate()  # fencing: abort, never clobber, if displaced
-        write_json(spark, _embed_meta_path(index_path), meta)
-        clear_build_marker(spark, index_path)
+    meta = si.build(
+        vecs.sparkSession,
+        EMBED_LSH,
+        index_path,
+        batch_id,
+        lambda: _write_embed_batch(
+            vecs, index_path, id_col, vec_col, n_planes, n_tables, dim,
+            batch_id,
+        ),
+        lambda n_rows: dict(
+            n_planes=int(n_planes), n_tables=int(n_tables), dim=dim,
+            sized_for_rows=int(sized_for) if sized_for else n_rows,
+            recall_at=float(recall_at), target_recall=float(target_recall),
+        ),
+    )
+    if own_cache:
+        vecs.unpersist()
     return meta
 
 
@@ -1985,44 +1682,19 @@ def append_to_embed_lsh_index(
     vec_col: str = "embedding",
     batch_id: int = 0,
 ) -> int:
-    """Append a batch to a stored embedding index — params from the
-    meta, O(batch) cost (the store is neither read nor re-bucketized),
-    idempotent under replay (``batch_id=N`` overwrite + meta key
-    replace), serialized against compactions and other appends by the
-    cross-process ``writer_lease``. Returns the batch row count."""
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        clear_stale_build_marker,
-        write_json,
-        writer_lease,
-    )
+    """Append a batch to a stored embedding index
+    (``stored_index.append``) — params from the meta, O(batch) cost
+    (the store is neither read nor re-bucketized), idempotent under
+    replay. Returns the batch row count."""
 
-    spark = vecs.sparkSession
-    with writer_lease(spark, index_path) as lease:
-        meta = read_embed_lsh_meta(spark, index_path)
-        if meta is None:
-            raise FileNotFoundError(
-                f"no embedding LSH index at {index_path} (build_embed_lsh_index first)"
-            )
-        # committed meta + held lease: a still-present build marker is
-        # a crashed build's debris — shed it before it can misroute a
-        # later transient meta-None read into a store-eating rebuild
-        clear_stale_build_marker(spark, index_path)
-        with lease.guard_data_writes():
-            n_rows = _write_embed_batch(
-                vecs,
-                index_path,
-                id_col,
-                vec_col,
-                meta["n_planes"],
-                meta["n_tables"],
-                meta["dim"],
-                batch_id,
-                version=int(meta.get("version", 0)),
-            )
-        meta.setdefault("batches", {})[str(batch_id)] = n_rows
-        lease.validate()  # fencing: abort, never clobber, if displaced
-        write_json(spark, _embed_meta_path(index_path), meta)
-    return n_rows
+    def write(meta: dict, version: int) -> int:
+        return _write_embed_batch(
+            vecs, index_path, id_col, vec_col,
+            meta["n_planes"], meta["n_tables"], meta["dim"], batch_id,
+            version=version,
+        )
+
+    return si.append(vecs.sparkSession, EMBED_LSH, index_path, batch_id, write)
 
 
 def embed_lsh_query_index(
@@ -2043,8 +1715,7 @@ def embed_lsh_query_index(
     verify against the stored vectors — the index side is scanned, never
     re-bucketized. Same semantics as ``cosine_incremental_pairs`` at
     the same params (test-enforced). ``max_batch_id_exclusive`` is the
-    streaming replay guard: index batches >= it are excluded from both
-    scans so a crashed-then-replayed micro-batch never self-matches.
+    streaming replay guard (``stored_index.scan``).
 
     ``broadcast_new`` (default on — this path's contract IS
     small-batch-vs-big-store): broadcast the batch's bucket rows and
@@ -2078,34 +1749,16 @@ def embed_lsh_query_index(
     probe-side bucket broadcast in the CANDIDATE join stays in both
     regimes — the probe is small by this path's contract."""
     spark = new_vecs.sparkSession
-    meta = read_embed_lsh_meta(spark, index_path)
-    if meta is None:
-        raise FileNotFoundError(f"no embedding LSH index at {index_path}")
-    version = int(meta.get("version", 0))
-
-    def _scan(sub: str) -> DataFrame:
-        # version pointer from the loaded meta: dirs of that version
-        # survive a concurrent compaction until the one after it; the
-        # meta-recorded schema (r15) skips per-scan footer inference
-        from projet_5spar_sparkstreaming_spark.fsio import versioned_subdir
-        from projet_5spar_sparkstreaming_spark.operators.dedup import (
-            _reader_with_meta_schema,
-        )
-
-        df = _reader_with_meta_schema(spark, meta, sub).parquet(
-            versioned_subdir(index_path, sub, version)
-        )
-        if max_batch_id_exclusive is not None:
-            df = df.filter(F.col("batch_id") < F.lit(max_batch_id_exclusive))
-        return df.drop("batch_id")
-
+    meta = si.require_meta(spark, EMBED_LSH, index_path)
     a = _lsh_buckets_arrow(
         new_vecs, id_col, vec_col, "id_a",
         meta["n_planes"], meta["n_tables"], meta["dim"],
     )
     if broadcast_new:
         a = F.broadcast(a)
-    b = _scan("buckets").select(F.col("id").alias("id_b"), "__bucket")
+    b = si.scan(spark, index_path, meta, "buckets", max_batch_id_exclusive).select(
+        F.col("id").alias("id_b"), "__bucket"
+    )
     if max_bucket_size is not None:
         over = (
             b.groupBy("__bucket")
@@ -2122,7 +1775,7 @@ def embed_lsh_query_index(
     new_va = new_vecs.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")
     )
-    stored_vb = _scan("vecs").select(
+    stored_vb = si.scan(spark, index_path, meta, "vecs", max_batch_id_exclusive).select(
         F.col("id").alias("id_b"), F.col("vec").alias("__vb")
     )
     # ADVICE r10: the routing must size the store the query actually
@@ -2156,89 +1809,10 @@ def compact_embed_lsh_index(
     target_partitions: int | None = None,
 ) -> dict:
     """Small-file compaction for the embedding index — same contract as
-    ``compact_minhash_index``: newest ``keep_last`` batches keep their
-    ids (replay exclusion must still isolate exactly the latest batch),
-    older ones merge under the minimum merged id (always < any future
-    batch, so every future ``batch_id < current`` filter includes
-    them); query results identical pre/post (test-enforced). READER-
-    SAFE via versioned subtrees: compacted ``buckets_v{N+1}``/
-    ``vecs_v{N+1}`` are fully written, then the meta's ``version``
-    pointer flips in one crash-safe ``write_json`` — concurrent
-    readers keep the version-N dirs (retained until the next
-    compaction); writers coordinate via the cross-process
-    ``writer_lease`` plus the flip-time drift guard (see
-    ``compact_minhash_index``). Returns the updated meta."""
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        clean_versions_except,
-        require_no_meta_drift,
-        versioned_subdir,
-        write_json,
-        writer_lease,
-    )
-
-    with writer_lease(spark, index_path) as lease:
-        meta = read_embed_lsh_meta(spark, index_path)
-        if meta is None:
-            raise FileNotFoundError(f"no embedding LSH index at {index_path}")
-        from projet_5spar_sparkstreaming_spark.fsio import (
-            clear_stale_build_marker,
-        )
-
-        clear_stale_build_marker(spark, index_path)  # crashed-build debris
-        batch_ids = sorted(int(b) for b in meta.get("batches", {}))
-        merged = batch_ids[: max(0, len(batch_ids) - keep_last)]
-        if len(merged) < 2:
-            return meta
-        merged_id = min(merged)
-        version = int(meta.get("version", 0))
-        snapshot = dict(meta["batches"])  # ids AND row counts: detects replayed appends too
-        n_parts = target_partitions or spark.sparkContext.defaultParallelism
-        remap = F.when(
-            F.col("batch_id").isin(merged), F.lit(merged_id)
-        ).otherwise(F.col("batch_id"))
-        from projet_5spar_sparkstreaming_spark.session import (
-            scoped_conf,
-            wide_vector_reader_capacity,
-        )
-
-        # the compaction rewrite scans the WHOLE wide vecs store — the
-        # engine owns these jobs, so the reader batch size is scoped
-        # here (see wide_vector_reader_capacity)
-        cap = wide_vector_reader_capacity(int(meta.get("dim") or 0))
-        confs = (
-            {"spark.sql.parquet.columnarReaderBatchSize": cap}
-            if cap is not None
-            else {}
-        )
-        with scoped_conf(spark, confs), lease.guard_data_writes():
-            for sub in ("buckets", "vecs"):
-                clean_versions_except(spark, index_path, sub, {version})
-                (
-                    spark.read.parquet(
-                        versioned_subdir(index_path, sub, version)
-                    )
-                    # shed orphan batches the meta never acknowledged
-                    # (kill -9'd append's partial data) — replay
-                    # re-delivers them; see compact_ivf_index
-                    .filter(
-                        F.col("batch_id").isin([int(b) for b in snapshot])
-                    )
-                    .withColumn("batch_id", remap)
-                    .repartition(n_parts, "batch_id", "id")
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(versioned_subdir(index_path, sub, version + 1))
-                )
-        require_no_meta_drift(
-            read_embed_lsh_meta(spark, index_path), snapshot, version, index_path
-        )
-        batches = meta["batches"]
-        merged_rows = sum(batches.pop(str(b)) for b in merged)
-        batches[str(merged_id)] = merged_rows + batches.pop(str(merged_id), 0)
-        meta["version"] = version + 1
-        lease.validate()  # fencing: abort, never clobber, if displaced
-        write_json(spark, _embed_meta_path(index_path), meta)  # the flip
-    return meta
+    ``compact_minhash_index`` (``stored_index.compact``); the whole-store
+    rewrite scans the wide vecs under a reader batch size sized for the
+    meta's ``dim``. Returns the updated meta."""
+    return si.compact(spark, EMBED_LSH, index_path, keep_last, target_partitions)
 
 
 def needs_embed_lsh_rebuild(meta: dict | None, min_extra_planes: int = 1) -> bool:
@@ -2253,10 +1827,7 @@ def needs_embed_lsh_rebuild(meta: dict | None, min_extra_planes: int = 1) -> boo
     plane-count comparison is exactly the criterion the sizing math
     itself uses. Each +1-plane trigger fires on ~2x growth, so
     rebuild cost is geometric/amortized."""
-    if meta is None:
-        return False
-    batches = meta.get("batches") or {}
-    total = sum(int(v) for v in batches.values())
+    total = si.stored_rows(meta)
     if not total:
         return False
     # re-derive under the SAME recall sizing the index was built with
@@ -2280,111 +1851,44 @@ def rebuild_embed_lsh_index(
     target_partitions: int | None = None,
 ) -> dict:
     """RETRAIN a grown embed-LSH index's parameters from its own stored
-    vectors — the embed-family twin of ``rebuild_ivf_index``. LSH
-    parameters are pinned for the life of the stored buckets (bucket
-    ids depend on them), so growing far past the size they were sized
-    for erodes the candidate-linearity contract; this re-derives
-    (n_planes, n_tables) at the CURRENT stored total
-    (``auto_lsh_params``), re-buckets every stored vector with the new
-    hyperplane stack — ``batch_id`` carried THROUGH the Arrow pass
-    (never re-joined on id, which fans out ids repeated across
-    batches), orphan batches the meta never acknowledged shed — and
-    copies the vecs tree, all under the next version; the meta's
-    (n_planes, n_tables, version) flip in one crash-safe
-    ``write_json``, so a concurrent reader holds either the old
-    params with the old trees or the new with the new, never a mix.
-    Serialized against appends/compactions by the writer lease; the
-    flip-time drift guard aborts if a replayed append changed any
-    batch under us. Appends and queries pick the new parameters up
-    from the meta automatically. Returns the updated meta."""
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        clean_versions_except,
-        read_json,
-        require_no_meta_drift,
-        versioned_subdir,
-        write_json,
-        writer_lease,
-    )
-    from projet_5spar_sparkstreaming_spark.session import (
-        scoped_conf,
-        wide_vector_reader_capacity,
-    )
+    vectors (``stored_index.rebuild``) — the embed-family twin of
+    ``rebuild_ivf_index``. Re-derives (n_planes, n_tables) at the
+    CURRENT stored total (``auto_lsh_params``) under the recall sizing
+    the index was built with unless overridden, re-buckets every stored
+    vector with the new hyperplane stack (``batch_id`` carried THROUGH
+    the Arrow pass, never re-joined on id) and copies the vecs tree into
+    the next version; params and version flip in one meta write, and
+    appends and queries pick the new params up from the meta. Returns
+    the updated meta."""
 
-    with writer_lease(spark, index_path) as lease:
-        meta = read_embed_lsh_meta(spark, index_path)
-        if meta is None:
-            raise FileNotFoundError(f"no embed LSH index at {index_path}")
-        from projet_5spar_sparkstreaming_spark.fsio import (
-            clear_stale_build_marker,
-        )
-
-        clear_stale_build_marker(spark, index_path)  # crashed-build debris
-        version = int(meta.get("version", 0))
-        snapshot = dict(meta["batches"])
-        total_rows = sum(int(v) for v in snapshot.values())
+    def retrain(meta, stored, total_rows, write) -> dict:
         dim = int(meta["dim"])
-        # default to the recall sizing the index was BUILT under
-        # (persisted in the meta since r13) so a policy-driven rebuild
-        # can't silently lower a stricter build's sizing (r12 advice);
-        # an explicit argument still overrides, and the meta below
-        # records whatever was actually used.
-        if recall_at is None:
-            recall_at = float(meta.get("recall_at", 0.99))
-        if target_recall is None:
-            target_recall = float(meta.get("target_recall", 0.95))
-        if n_planes == "auto" or n_tables == "auto":
-            n_planes, n_tables = auto_lsh_params(
-                total_rows, dim=dim,
-                recall_at=recall_at, target_recall=target_recall,
+        # the recall sizing the index was BUILT under, unless overridden
+        r_at = meta.get("recall_at", 0.99) if recall_at is None else recall_at
+        t_rec = target_recall
+        if t_rec is None:
+            t_rec = meta.get("target_recall", 0.95)
+        planes, tables = n_planes, n_tables
+        if planes == "auto" or tables == "auto":
+            planes, tables = auto_lsh_params(
+                total_rows, dim=dim, recall_at=r_at, target_recall=t_rec
             )
-        n_parts = target_partitions or spark.sparkContext.defaultParallelism
-        for sub in ("buckets", "vecs"):
-            clean_versions_except(spark, index_path, sub, {version})
-        vdir = versioned_subdir(index_path, "vecs", version)
-        cap = wide_vector_reader_capacity(dim)
-        confs = (
-            {"spark.sql.parquet.columnarReaderBatchSize": cap}
-            if cap is not None
-            else {}
+        write(
+            "buckets",
+            _lsh_buckets_arrow(
+                stored, "id", "vec", "id", planes, tables, dim,
+                passthrough=("batch_id",),
+            ),
         )
-        with scoped_conf(spark, confs), lease.guard_data_writes():
-            stored = (
-                spark.read.option("basePath", vdir)
-                .parquet(vdir)
-                .filter(F.col("batch_id").isin([int(b) for b in snapshot]))
-                .select("id", "vec", "batch_id")
-                .cache()
-            )
-            (
-                _lsh_buckets_arrow(
-                    stored, "id", "vec", "id", n_planes, n_tables, dim,
-                    passthrough=("batch_id",),
-                )
-                .repartition(n_parts, "batch_id", "id")
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(versioned_subdir(index_path, "buckets", version + 1))
-            )
-            (
-                stored.repartition(n_parts, "batch_id", "id")
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(versioned_subdir(index_path, "vecs", version + 1))
-            )
-            stored.unpersist()
-        require_no_meta_drift(
-            read_json(spark, _embed_meta_path(index_path)),
-            snapshot, version, index_path,
+        write("vecs", stored)
+        return dict(
+            n_planes=int(planes), n_tables=int(tables),
+            recall_at=float(r_at), target_recall=float(t_rec),
         )
-        meta["n_planes"] = int(n_planes)
-        meta["n_tables"] = int(n_tables)
-        meta["version"] = version + 1
-        meta["sized_for_rows"] = total_rows
-        meta["recall_at"] = float(recall_at)
-        meta["target_recall"] = float(target_recall)
-        lease.validate()  # fencing: abort, never clobber, if displaced
-        write_json(spark, _embed_meta_path(index_path), meta)  # the flip
-    return meta
+
+    return si.rebuild(
+        spark, EMBED_LSH, index_path, "vecs", retrain, target_partitions
+    )
 
 
 def lsh_bucketed_top_k(

@@ -79,16 +79,11 @@ def get_spark(
         )
         # spark.sql.parquet.columnarReaderBatchSize stays at its 4096
         # default: shrinking it globally costs ~2x on narrow 5M-row
-        # scans (measured r9). For VERY wide array columns (dim-768+
-        # embeddings) 4096 rows is a 25MB column batch per task and can
-        # OOM the vectorized reader under high concurrency — it is an
-        # ACTION-TIME conf, so the engine scopes it around the jobs it
-        # OWNS (the embed ingest guard's foreachBatch body, the
-        # wide-store compaction rewrites) via scoped_conf +
-        # wide_vector_reader_capacity below; callers running their own
-        # actions over wide vectors use the same pair. The engine's
-        # wide-array query paths avoid the main pressure source (wide
-        # broadcasts) by construction.
+        # scans (measured r9). Wide array columns (dim-768+ embeddings)
+        # can OOM the vectorized reader at 4096 rows, so the engine
+        # scopes it (an ACTION-TIME conf) around the jobs it owns with
+        # wide_vector_scope below; callers running their own actions
+        # over wide vectors use it too.
         # --- heap: local mode puts driver+executors in ONE JVM; the 1g
         # default dies under long multi-query sessions (sweeps, bench).
         # Applied at JVM launch, so only effective for sessions this
@@ -209,3 +204,14 @@ class scoped_conf:
             else:
                 self._spark.conf.set(k, old)
         return False
+
+
+def wide_vector_scope(spark, dim: int) -> scoped_conf:
+    """``scoped_conf`` sizing the vectorized parquet reader for jobs
+    that scan ``dim``-wide vectors (``wide_vector_reader_capacity``);
+    an empty, no-op scope for narrow ones."""
+    cap = wide_vector_reader_capacity(dim)
+    return scoped_conf(
+        spark,
+        {} if cap is None else {"spark.sql.parquet.columnarReaderBatchSize": cap},
+    )

@@ -17,9 +17,19 @@ scan, which is the same shape a 100 TB daily batch run pays
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from projet_5spar_sparkstreaming_spark import fsio
+from projet_5spar_sparkstreaming_spark.operators import dedup as od
+from projet_5spar_sparkstreaming_spark.operators import similarity as sim
+from projet_5spar_sparkstreaming_spark.operators import stored_index
+from projet_5spar_sparkstreaming_spark.session import wide_vector_scope
+from projet_5spar_sparkstreaming_spark.streaming.sinks import foreach_batch_sink
 
 
 def stream_dedup(
@@ -35,40 +45,113 @@ def stream_dedup(
 
 
 def require_index_meta_consistent(spark, index_dir: str, meta) -> None:
-    """Refuse to treat an index whose data is on disk but whose
-    ``_meta.json`` read came back None as "no index": that state is
-    either the transient no-file instant of a concurrent crash-safe
-    meta swap (``fsio.write_json``) or a crashed mid-life mutation —
-    in both cases rebuilding would DELETE the accumulated store
-    (``build_minhash_index``/``build_embed_lsh_index`` start with a
-    recursive delete). Raising makes the micro-batch fail and RETRY
-    from the checkpoint instead; an operator restores the meta (its
-    ``.old`` aside survives a mid-swap crash) if the state persists.
+    """Refuse to treat an index whose data is on disk but whose meta
+    read came back None as "no index": that state is either the
+    transient no-file instant of a concurrent crash-safe meta swap
+    (``fsio.write_json``) or a crashed mid-life mutation — in both
+    cases rebuilding would DELETE the accumulated store (builds start
+    with a recursive delete). Raising makes the micro-batch fail and
+    RETRY from the checkpoint instead; an operator restores the meta
+    (its ``.old`` aside survives a mid-swap crash) if the state
+    persists.
 
-    ONE exception (r11 advice): data-present/meta-None *under the
-    sibling ``{index}.building`` marker* is a build that crashed
-    between its first write and its meta — that data was never
-    acknowledged (its micro-batch is exactly the one being replayed)
-    and, unlike the mid-swap case, there is no ``.old`` aside to
-    restore, so raising here would wedge the retry loop permanently.
-    The marker proves it is safe to fall through to the guard's build
-    path, whose initial recursive delete clears the debris."""
-    if meta is not None:
-        return
-    from projet_5spar_sparkstreaming_spark.fsio import (
-        build_marker_present,
-        path_exists,
-    )
-
-    if path_exists(spark, index_dir):
-        if build_marker_present(spark, index_dir):
-            return  # crashed first build: replay may rebuild over it
+    ONE exception: data-present/meta-None *under the sibling
+    ``{index}.building`` marker* is a build that crashed between its
+    first write and its meta — that data was never acknowledged (its
+    micro-batch is exactly the one being replayed) and there is no
+    ``.old`` aside to restore, so raising would wedge the retry loop.
+    The marker proves it is safe to fall through to the build, whose
+    initial recursive delete clears the debris."""
+    if (
+        meta is None
+        and fsio.path_exists(spark, index_dir)
+        and not fsio.build_marker_present(spark, index_dir)
+    ):
         raise IOError(
             f"{index_dir}: index data present but its metadata read "
             "returned None — transient meta swap or crashed mutation. "
             "Refusing to rebuild over existing data; retry the batch "
             "or restore the metadata file (check its .old aside)."
         )
+
+
+def _guard_meta(spark, spec, index_dir: str) -> dict | None:
+    """Steps 1-2 of a guard micro-batch: ONE meta read (shared with the
+    batch plan, whose parameters come from it), checked by
+    ``require_index_meta_consistent``."""
+    meta = stored_index.read_meta(spark, spec, index_dir)
+    require_index_meta_consistent(spark, index_dir, meta)
+    return meta
+
+
+def _guard_step(
+    spark,
+    spec,
+    index_dir: str,
+    batch_id: int,
+    meta: dict | None,
+    build,
+    append,
+    survivors=None,
+    out_dir: str | None = None,
+    outgrown=None,
+    rebuild=None,
+) -> None:
+    """Steps 3-5 of a guard micro-batch, shared by the three ingest
+    guards: build the index from the first batch (after writing its
+    ``survivors`` — the plan has no cross-batch leg yet), otherwise
+    append, then ``rebuild()`` when ``outgrown(meta)`` says the store
+    has outgrown its parameters.
+
+    The survivors write (dedup guards) overlaps the append: both read
+    the same cached batch, so the micro-batch pays one round of fixed
+    job cost. On a FRESH batch the append only CREATES ``batch_id=N``
+    files, which the survivors plan prunes via its ``batch_id < N``
+    filter. A REPLAY — the meta holds the batch, or its ``batch_id=N``
+    dir is on disk from an append killed before its meta write —
+    overwrites, i.e. DELETES, the crashed attempt's files, so the plan
+    (and its file listing) is built before the append starts."""
+
+    def write_survivors(df: DataFrame) -> None:
+        out = os.path.join(out_dir, f"batch_id={batch_id}")
+        df.write.mode("overwrite").parquet(out)
+
+    if meta is None:
+        if survivors is not None:
+            write_survivors(survivors())
+        build()
+        return
+
+    def grow() -> None:
+        append()
+        if outgrown is not None and outgrown(
+            stored_index.read_meta(spark, spec, index_dir)
+        ):
+            rebuild()
+
+    if survivors is None:
+        grow()
+    elif stored_index.batch_written(spark, spec, index_dir, meta, batch_id):
+        planned = survivors()
+        od._parallel_actions(lambda: write_survivors(planned), grow)
+    else:
+        od._parallel_actions(lambda: write_survivors(survivors()), grow)
+
+
+def _admit(batch: DataFrame, id_col: str, batch_id: int, meta, cross, within):
+    """The admission rule of ``minhash_ingest_batch``: drop the batch
+    rows of ``cross()`` pairs (id_a, vs earlier batches) and the larger
+    ids of ``within()`` pairs. No distinct over the drop set: left_anti
+    ignores duplicate keys."""
+    earlier = meta is not None and any(
+        int(b) < batch_id for b in meta.get("batches", {})
+    )
+    # the cross leg is planned first: its plan lists the stored index
+    cross_ids = cross().select(F.col("id_a").alias(id_col)) if earlier else None
+    dropped = within().select(F.col("id_b").alias(id_col))
+    if cross_ids is not None:
+        dropped = cross_ids.unionByName(dropped)
+    return batch.join(dropped, id_col, "left_anti")
 
 
 def minhash_ingest_batch(
@@ -108,17 +191,8 @@ def minhash_ingest_batch(
     not two); None reads it here.
 
     Returns the surviving (id, text) rows."""
-    from pyspark.sql import functions as F
-
-    from projet_5spar_sparkstreaming_spark.operators.dedup import (
-        minhash_near_dup_pairs,
-        minhash_query_index,
-        read_minhash_meta,
-    )
-
-    spark = batch.sparkSession
     if meta is None:
-        meta = read_minhash_meta(spark, index_dir)
+        meta = od.read_minhash_meta(batch.sparkSession, index_dir)
     if meta is not None:
         # Pin BOTH legs to the index's stored parameters: the cross-batch
         # query always uses the meta's hash space, so the within-batch
@@ -141,38 +215,18 @@ def minhash_ingest_batch(
         n = 3 if n is None else n
         num_hashes = 64 if num_hashes is None else num_hashes
         bands = 16 if bands is None else bands
-    drop_cross = None
-    if meta is not None and any(
-        int(b) < batch_id for b in meta.get("batches", {})
-    ):
-        drop_cross = minhash_query_index(
-            batch,
-            index_dir,
-            id_col,
-            text_col,
-            threshold=threshold,
-            max_batch_id_exclusive=batch_id,
+    return _admit(
+        batch, id_col, batch_id, meta,
+        lambda: od.minhash_query_index(
+            batch, index_dir, id_col, text_col, threshold=threshold,
+            max_batch_id_exclusive=batch_id, precomputed_sig=precomputed_sig,
+        ),
+        lambda: od.minhash_near_dup_pairs(
+            batch, id_col, text_col,
+            n=n, num_hashes=num_hashes, bands=bands, threshold=threshold,
             precomputed_sig=precomputed_sig,
-        ).select(F.col("id_a").alias(id_col))
-    drop_within = minhash_near_dup_pairs(
-        batch, id_col, text_col,
-        n=n, num_hashes=num_hashes, bands=bands, threshold=threshold,
-        precomputed_sig=precomputed_sig,
-    ).select(F.col("id_b").alias(id_col))  # id_a < id_b: keep min id
-    # r15: NO distinct over the drop set — left_anti semantics ignore
-    # duplicate build-side keys entirely, so the distinct this replaces
-    # paid a full shuffle round per micro-batch only to shrink the
-    # anti-join input from candidate-pair rows down to distinct doc
-    # ids. Candidate volume is already bounded by the pair operators'
-    # own guards (dedup-grade thresholds, max_bucket_size, the LSH
-    # fence), and the anti join shuffles those few extra rows more
-    # cheaply than a dedicated exchange+agg round. r14 had already
-    # collapsed three distincts to one; zero is the honest count.
-    dropped = (
-        drop_within if drop_cross is None
-        else drop_cross.unionByName(drop_within)
+        ),
     )
-    return batch.join(dropped, id_col, "left_anti")
 
 
 def stream_neardup_ingest(
@@ -194,98 +248,40 @@ def stream_neardup_ingest(
     ``minhash_query_index``), near-dup arrivals are dropped, and
     survivors land in ``out_dir``.
 
-    Index lifecycle: batch 0 creates the index (params pinned in
-    ``_meta.json``); every batch appends its signatures/bands under
-    ``batch_id=N`` (``append_to_minhash_index`` — O(batch), replays
-    overwrite their own subdir); index existence and size are metadata
-    lookups through the Hadoop FS abstraction, never an ``os.walk`` or
-    a ``count()`` over the store. Long-running streams bound their file
-    count with ``compact_minhash_index`` (offline or between batches).
-    Replay safety: the cross-batch join excludes index rows with
-    ``batch_id >= N``, so a batch whose index write landed but whose
-    checkpoint commit did not cannot match itself on replay (the
-    self-match-at-1.0 failure that would silently drop every doc)."""
-    import os
-
-    from projet_5spar_sparkstreaming_spark.operators.dedup import (
-        append_to_minhash_index,
-        build_minhash_index,
-        minhash_signature_arrow,
-        read_minhash_meta,
-    )
-    from projet_5spar_sparkstreaming_spark.streaming.sinks import foreach_batch_sink
+    Batch 0 builds the index (params pinned in ``_meta.json``; a stream
+    resumed over an index built with other knobs follows the index);
+    every later batch appends its signatures/bands under ``batch_id=N``
+    (``_guard_step``: O(batch), replays overwrite their own subdir).
+    ONE signature pass per micro-batch serves the stored-index query,
+    the within-batch self-join and the append. Long-running streams
+    bound their file count with ``compact_minhash_index``; replays are
+    safe by the ``batch_id < N`` exclusion (``minhash_ingest_batch``)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(id_col, text_col).cache()
-        # parameters come FROM the index once it exists (a stream
-        # resumed over an index built with different knobs must follow
-        # the index, or bucket joins compare incompatible hashes);
-        # ONE meta read per micro-batch, shared with ingest_batch
-        meta = read_minhash_meta(batch.sparkSession, index_dir)
-        require_index_meta_consistent(batch.sparkSession, index_dir, meta)
-        p_n, p_hashes, p_bands = (
-            (meta["n"], meta["num_hashes"], meta["bands"])
-            if meta is not None
-            else (n, num_hashes, bands)
-        )
-        # ONE signature pass per micro-batch, shared by the stored-index
-        # query, the within-batch self-join AND the index append
-        sig = minhash_signature_arrow(batch, id_col, text_col, p_n, p_hashes).cache()
-        def _ingest() -> "DataFrame":
-            return minhash_ingest_batch(
-                batch, index_dir, batch_id, id_col, text_col, threshold,
-                n=p_n, num_hashes=p_hashes, bands=p_bands,
-                precomputed_sig=sig, meta=meta,
-            )
-
-        def _write_survivors(survivors: "DataFrame") -> None:
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={batch_id}")
-            )
-
-        if meta is None:
-            # first batch: the build DELETES and recreates the index
-            # tree the survivors query never reads (no cross-batch leg
-            # yet), but keep it sequential — it runs once per stream
-            _write_survivors(_ingest())
-            build_minhash_index(
+        spark = batch.sparkSession
+        meta = _guard_meta(spark, od.MINHASH, index_dir)
+        src = meta or {"n": n, "num_hashes": num_hashes, "bands": bands}
+        pinned = {k: src[k] for k in ("n", "num_hashes", "bands")}
+        sig = od.minhash_signature_arrow(
+            batch, id_col, text_col, pinned["n"], pinned["num_hashes"]
+        ).cache()
+        _guard_step(
+            spark, od.MINHASH, index_dir, batch_id, meta,
+            build=lambda: od.build_minhash_index(
                 batch, index_dir, id_col, text_col,
-                n=p_n, num_hashes=p_hashes, bands=p_bands, batch_id=batch_id,
+                batch_id=batch_id, precomputed_sig=sig, **pinned,
+            ),
+            append=lambda: od.append_to_minhash_index(
+                batch, index_dir, id_col, text_col, batch_id,
                 precomputed_sig=sig,
-            )
-        else:
-            # r15 (guide §2.6): the survivors plan build + write and
-            # the index append are independent work over the same
-            # cached batch/sig tables — overlapped so the micro-batch
-            # pays one round of fixed cost (plan build is ~0.9 s of
-            # driver time per batch; the append ~0.9 s of mostly-idle
-            # job waves). On a FRESH batch the append only CREATES
-            # batch_id=N files, which the concurrently-built survivors
-            # plan prunes via its batch_id < N filter, so the file-
-            # listing race is benign. A REPLAYED batch (meta already
-            # holds this batch_id) instead builds the plan BEFORE the
-            # append runs: the replay's overwrite DELETES the crashed
-            # attempt's files, and a concurrent directory listing
-            # walking a vanishing subdir could fail the batch.
-            from projet_5spar_sparkstreaming_spark.operators.dedup import (
-                _parallel_actions,
-            )
-
-            def _append() -> None:
-                append_to_minhash_index(
-                    batch, index_dir, id_col, text_col, batch_id,
-                    precomputed_sig=sig,
-                )
-
-            if str(batch_id) in (meta.get("batches") or {}):
-                survivors = _ingest()  # replay: list before the delete
-                _parallel_actions(
-                    lambda: _write_survivors(survivors), _append
-                )
-            else:
-                _parallel_actions(
-                    lambda: _write_survivors(_ingest()), _append
-                )
+            ),
+            survivors=lambda: minhash_ingest_batch(
+                batch, index_dir, batch_id, id_col, text_col, threshold,
+                precomputed_sig=sig, meta=meta, **pinned,
+            ),
+            out_dir=out_dir,
+        )
         sig.unpersist()
         batch.unpersist()
 
@@ -313,42 +309,19 @@ def embed_ingest_batch(
     Same admission rule as ``minhash_ingest_batch``. Within-batch
     params default to auto-from-batch-size (the batch IS the corpus
     being self-joined). Returns surviving (id, vec) rows."""
-    from pyspark.sql import functions as F
-
-    from projet_5spar_sparkstreaming_spark.operators.similarity import (
-        cosine_near_dup_pairs,
-        embed_lsh_query_index,
-        read_embed_lsh_meta,
-    )
-
-    spark = batch.sparkSession
     if meta is None:
-        meta = read_embed_lsh_meta(spark, index_dir)
-    drop_cross = None
-    if meta is not None and any(
-        int(b) < batch_id for b in meta.get("batches", {})
-    ):
-        drop_cross = embed_lsh_query_index(
-            batch,
-            index_dir,
-            id_col,
-            vec_col,
-            threshold=threshold,
+        meta = sim.read_embed_lsh_meta(batch.sparkSession, index_dir)
+    return _admit(
+        batch, id_col, batch_id, meta,
+        lambda: sim.embed_lsh_query_index(
+            batch, index_dir, id_col, vec_col, threshold=threshold,
             max_batch_id_exclusive=batch_id,
-        ).select(F.col("id_a").alias(id_col))
-    drop_within = cosine_near_dup_pairs(
-        batch, id_col, vec_col, threshold=threshold,
-        n_planes=within_planes, n_tables=within_tables, dim=dim,
-    ).select(F.col("id_b").alias(id_col))  # id_a < id_b: keep min id
-    # r15: no distinct over the drop set — left_anti ignores duplicate
-    # build-side keys, and candidate volume is bounded by the pair
-    # operators' own guards, so the distinct's per-batch shuffle round
-    # bought nothing (see minhash_ingest_batch)
-    dropped = (
-        drop_within if drop_cross is None
-        else drop_cross.unionByName(drop_within)
+        ),
+        lambda: sim.cosine_near_dup_pairs(
+            batch, id_col, vec_col, threshold=threshold,
+            n_planes=within_planes, n_tables=within_tables, dim=dim,
+        ),
     )
-    return batch.join(dropped, id_col, "left_anti")
 
 
 def stream_embed_neardup_ingest(
@@ -369,113 +342,47 @@ def stream_embed_neardup_ingest(
     equi-joins the STORED (id, bucket) table, exact-cosine-verifies
     candidates against the stored vectors, drops near-dup arrivals
     (cross-batch strictly-earlier, or smaller-id within-batch), and
-    appends its own buckets + vectors to the index.
+    appends its own buckets + vectors to the index (``_guard_step``).
 
-    Index lifecycle mirrors the text guard: batch 0 builds the index
-    with params sized via ``expected_index_rows`` (the corpus size the
-    stream is expected to accumulate — pinned once because stored
-    bucket ids depend on them; see ``build_embed_lsh_index``), later
-    batches ``append_to_embed_lsh_index`` (O(batch)); existence/size/
-    params are ``_meta.json`` lookups — no ``os.walk``, no per-batch
-    ``count()`` over the index. Replay-safe via the ``batch_id < N``
-    exclusion; compact with ``compact_embed_lsh_index``.
+    Batch 0 builds the index with params sized via
+    ``expected_index_rows`` (the corpus the stream is expected to
+    accumulate — pinned once because stored bucket ids depend on them;
+    see ``build_embed_lsh_index``). The guard owns its batch's jobs, so
+    it scopes the wide-vector reader batch size for the index's ``dim``.
 
-    MAINTENANCE (r12, twin of the IVF guard's rebuild_growth_factor):
-    with ``rebuild_when_outgrown=True`` the guard evaluates
-    ``needs_embed_lsh_rebuild`` after each append — a pure metadata
-    predicate: does ``auto_lsh_params`` at the current stored total
-    want more planes than the index was built with? — and runs
-    ``rebuild_embed_lsh_index`` inside the micro-batch when it trips:
-    every stored vector re-bucketed under the retrained hyperplane
-    stack, (params, version) flipped atomically, later batches
-    bucketize with the new params from the meta. Plane counts grow
-    ~log2(n), so each +1-plane trigger fires on ~2x growth and the
-    whole-store rewrites amortize geometrically. Leave False (default)
-    when ``expected_index_rows`` already sized the params for the
-    corpus the stream will accumulate."""
-    import os
-
-    from projet_5spar_sparkstreaming_spark.operators.similarity import (
-        append_to_embed_lsh_index,
-        build_embed_lsh_index,
-        needs_embed_lsh_rebuild,
-        read_embed_lsh_meta,
-        rebuild_embed_lsh_index,
-    )
-    from projet_5spar_sparkstreaming_spark.streaming.sinks import foreach_batch_sink
+    With ``rebuild_when_outgrown=True`` the guard runs
+    ``rebuild_embed_lsh_index`` inside the micro-batch whenever
+    ``needs_embed_lsh_rebuild`` trips after an append (auto params at
+    the stored total want more planes than the index has — ~2x growth
+    per trigger, so whole-store rewrites amortize geometrically). Leave
+    False (default) when ``expected_index_rows`` already sized the
+    params for the corpus the stream will accumulate."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from projet_5spar_sparkstreaming_spark.session import (
-            scoped_conf,
-            wide_vector_reader_capacity,
-        )
-
         batch = batch_df.select(id_col, vec_col).cache()
         spark = batch.sparkSession
-        # ONE meta read per micro-batch, shared with ingest_batch and
-        # the build-or-append decision below
-        meta = read_embed_lsh_meta(spark, index_dir)
-        require_index_meta_consistent(spark, index_dir, meta)
-        # the guard OWNS this batch's jobs, so the wide-vector reader
-        # batch size can be scoped here (action-time conf): at real
-        # dims the stored-vecs scan's 4096-row default makes ~25 MB
-        # column batches per task and can OOM under full concurrency
-        cap = wide_vector_reader_capacity(
-            int(meta["dim"]) if meta is not None else dim
-        )
-        confs = (
-            {"spark.sql.parquet.columnarReaderBatchSize": cap}
-            if cap is not None
-            else {}
-        )
-        with scoped_conf(spark, confs):
-            def _ingest() -> "DataFrame":
-                return embed_ingest_batch(
-                    batch, index_dir, batch_id, id_col, vec_col, threshold,
-                    dim=dim, meta=meta,
-                )
-
-            def _write_survivors(survivors: "DataFrame") -> None:
-                survivors.write.mode("overwrite").parquet(
-                    os.path.join(out_dir, f"batch_id={batch_id}")
-                )
-
-            if meta is None:
-                _write_survivors(_ingest())
-                build_embed_lsh_index(
+        meta = _guard_meta(spark, sim.EMBED_LSH, index_dir)
+        with wide_vector_scope(spark, sim.EMBED_LSH.dim(meta) if meta else dim):
+            _guard_step(
+                spark, sim.EMBED_LSH, index_dir, batch_id, meta,
+                build=lambda: sim.build_embed_lsh_index(
                     batch, index_dir, id_col, vec_col,
                     dim=dim, recall_at=max(threshold, 0.99),
                     expected_rows=expected_index_rows, batch_id=batch_id,
-                )
-            else:
-                # r15 (guide §2.6): overlap the survivors plan build +
-                # write with the index append — same fresh-vs-replay
-                # split as the text guard (a fresh append only CREATES
-                # pruned batch_id=N files; a replay's overwrite DELETES
-                # files a concurrent listing could walk, so replays
-                # build the plan first)
-                def _append() -> None:
-                    append_to_embed_lsh_index(
-                        batch, index_dir, id_col, vec_col, batch_id
-                    )
-                    if rebuild_when_outgrown and needs_embed_lsh_rebuild(
-                        read_embed_lsh_meta(spark, index_dir)
-                    ):
-                        rebuild_embed_lsh_index(spark, index_dir)
-
-                from projet_5spar_sparkstreaming_spark.operators.dedup import (
-                    _parallel_actions,
-                )
-
-                if str(batch_id) in (meta.get("batches") or {}):
-                    survivors = _ingest()  # replay: list before delete
-                    _parallel_actions(
-                        lambda: _write_survivors(survivors), _append
-                    )
-                else:
-                    _parallel_actions(
-                        lambda: _write_survivors(_ingest()), _append
-                    )
+                ),
+                append=lambda: sim.append_to_embed_lsh_index(
+                    batch, index_dir, id_col, vec_col, batch_id
+                ),
+                survivors=lambda: embed_ingest_batch(
+                    batch, index_dir, batch_id, id_col, vec_col, threshold,
+                    dim=dim, meta=meta,
+                ),
+                out_dir=out_dir,
+                outgrown=(
+                    sim.needs_embed_lsh_rebuild if rebuild_when_outgrown else None
+                ),
+                rebuild=lambda: sim.rebuild_embed_lsh_index(spark, index_dir),
+            )
         batch.unpersist()
 
     os.makedirs(out_dir, exist_ok=True)
@@ -493,72 +400,47 @@ def stream_ivf_ingest(
     rebuild_growth_factor: float | None = None,
 ):
     """Maintain a persisted IVF ANN index from a vector stream — the
-    third index family's streaming path, completing the symmetry with
-    the minhash and embed-LSH ingest guards (which FILTER arrivals;
-    this one serves them: every micro-batch's vectors become queryable
-    through ``query_ivf_index`` as soon as the batch commits).
+    third index family's streaming path (the dedup guards FILTER
+    arrivals; this one serves them: every micro-batch's vectors become
+    queryable through ``query_ivf_index`` as soon as the batch commits).
 
-    Micro-batch semantics mirror the dedup guards' index lifecycle:
-    the first batch builds the index — training the quantizer on
-    itself, with cells sized by ``expected_index_rows`` (the corpus
-    the stream is expected to ACCUMULATE: cells are pinned at build,
-    and a quantizer sized for the seed batch would leave the grown
-    index with mega-cells; standard IVF practice, same contract as the
-    embed guard's ``expected_index_rows``) — and later batches
-    ``append_to_ivf_index``: one Arrow cell-assignment pass over the
-    batch ONLY (the store is neither read nor re-assigned), landing in
-    their own ``(cell, batch_id)`` partitions via dynamic partition
-    overwrite, so a crashed-then-replayed micro-batch replaces exactly
-    itself — exactly-once index state without a transactional store.
-    Per-batch meta/existence checks are ``_centroids.json`` lookups
-    through fsio (no ``os.walk``, no per-batch ``count()`` over the
-    store); a present data tree with an unreadable meta fails the
-    batch for retry instead of rebuilding over data
-    (``require_index_meta_consistent``). Bound small files with
+    Same micro-batch step as the dedup guards (``_guard_step``), minus
+    the survivors: the first batch builds the index, training the
+    quantizer on itself with cells sized by ``expected_index_rows``
+    (cells are pinned at build; a quantizer sized for the seed batch
+    would leave the grown index with mega-cells); later batches
+    ``append_to_ivf_index`` into their own ``(cell, batch_id)``
+    partitions via dynamic overwrite, so a replayed micro-batch
+    replaces exactly itself. Bound small files with
     ``compact_ivf_index``.
 
-    MAINTENANCE (r11 verdict task 5): with ``rebuild_growth_factor``
-    set (the ~4x rule), the guard composes the r11 primitives into a
-    self-maintaining index — after each append it evaluates
-    ``needs_ivf_rebuild`` (a pure metadata predicate: stored total vs
-    what the quantizer was sized for) and, when the store has outgrown
-    its cell geometry, runs ``rebuild_ivf_index`` INSIDE the
-    micro-batch: the retrained tree is written reader-safe under the
-    next version and the (centroids, version) pair flips atomically,
-    so queries served concurrently see either geometry, never a mix;
-    appends in later micro-batches assign with the NEW quantizer. A
-    crash mid-rebuild replays the batch: the append is idempotent
-    (dynamic (cell, batch_id) overwrite), the policy re-trips, and the
-    rebuild's own version hygiene clears the partial ``v+1`` debris.
-    Leave it ``None`` (default) to keep rebuilds an explicit operator
-    action — e.g. when ``expected_index_rows`` already sized the
-    quantizer for the corpus the stream will accumulate.
-    """
-    from projet_5spar_sparkstreaming_spark.fsio import read_json
-    from projet_5spar_sparkstreaming_spark.operators.similarity import (
-        append_to_ivf_index,
-        build_ivf_index,
-        needs_ivf_rebuild,
-        rebuild_ivf_index,
-    )
-    from projet_5spar_sparkstreaming_spark.streaming.sinks import foreach_batch_sink
+    With ``rebuild_growth_factor`` set (the ~4x rule) the guard runs
+    ``rebuild_ivf_index`` inside the micro-batch whenever
+    ``needs_ivf_rebuild`` trips after an append: the retrained tree is
+    written under the next version and (centroids, version) flip
+    atomically, so concurrent queries see either geometry, never a
+    mix. A crash mid-rebuild replays the batch: the append is
+    idempotent, the policy re-trips, and the rebuild clears its own
+    partial debris. Leave it ``None`` (default) to keep rebuilds an
+    explicit operator action."""
+    outgrown = None
+    if rebuild_growth_factor is not None:
+        outgrown = partial(sim.needs_ivf_rebuild, growth_factor=rebuild_growth_factor)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(id_col, vec_col)
         spark = batch.sparkSession
-        meta_path = index_dir.rstrip("/") + "/_centroids.json"
-        meta = read_json(spark, meta_path)
-        require_index_meta_consistent(spark, index_dir, meta)
-        if meta is None:
-            build_ivf_index(
+        _guard_step(
+            spark, sim.IVF, index_dir, batch_id, _guard_meta(spark, sim.IVF, index_dir),
+            build=lambda: sim.build_ivf_index(
                 batch, index_dir, id_col, vec_col,
                 batch_id=batch_id, expected_rows=expected_index_rows,
-            )
-        else:
-            append_to_ivf_index(batch, index_dir, id_col, vec_col, batch_id)
-            if rebuild_growth_factor is not None and needs_ivf_rebuild(
-                read_json(spark, meta_path), rebuild_growth_factor
-            ):
-                rebuild_ivf_index(spark, index_dir)
+            ),
+            append=lambda: sim.append_to_ivf_index(
+                batch, index_dir, id_col, vec_col, batch_id
+            ),
+            outgrown=outgrown,
+            rebuild=lambda: sim.rebuild_ivf_index(spark, index_dir),
+        )
 
     return foreach_batch_sink(vecs_stream, _process, checkpoint_dir, trigger)

@@ -9,7 +9,8 @@ local pid, no TTL wait), and a re-run of the same mutation converges.
 
 All nine (family x op) cells run, with the barrier cycled so every
 barrier kind is exercised against every family; mid_data_write kills
-are additionally jittered by a per-scenario deterministic delay."""
+are additionally jittered by a per-scenario deterministic delay. The
+module is `slow`; the three `smoke` cells also run by default."""
 
 from __future__ import annotations
 
@@ -218,8 +219,20 @@ def _recover_and_check(spark, family, op, idx):
         assert rows == expected[sub], (sub, rows, expected[sub])
 
 
-@pytest.mark.parametrize("family", FAMILIES)
-@pytest.mark.parametrize("op", OPS)
+# one cell per family and per op, which between them hit all three
+# barrier kinds, also runs in the default suite (the `smoke` marker)
+SMOKE = {("build", "minhash"), ("append", "embed"), ("compact", "ivf")}
+CELLS = [
+    pytest.param(
+        op, family, id=f"{op}-{family}",
+        marks=[pytest.mark.smoke] if (op, family) in SMOKE else [],
+    )
+    for op in OPS
+    for family in FAMILIES
+]
+
+
+@pytest.mark.parametrize(("op", "family"), CELLS)
 def test_kill9_mid_mutation_recovers(spark, tmp_path, family, op):
     barrier = BARRIERS[(FAMILIES.index(family) + OPS.index(op)) % 3]
     idx = str(tmp_path / f"{family}_{op}_idx")

@@ -420,7 +420,7 @@ def test_ivf_index_append_query_compact(spark, sf_dir, tmp_path):
     """IVF lifecycle: append assigns new vectors with the STORED
     quantizer (queries see the union immediately), replayed appends
     replace themselves, and compaction preserves query results."""
-    from projet_5spar_sparkstreaming_spark.fsio import read_json
+    from projet_5spar_sparkstreaming_spark.fsio import read_json, write_json
     from projet_5spar_sparkstreaming_spark.operators.similarity import (
         append_to_ivf_index,
         build_ivf_index,
@@ -442,18 +442,30 @@ def test_ivf_index_append_query_compact(spark, sf_dir, tmp_path):
     meta = read_json(spark, idx + "/_centroids.json")
     assert set(meta["batches"]) == {"0", "1", "2"}
     assert sum(meta["batches"].values()) == emb.count()
+    # the build records the data subtree's schema like the other families
+    assert set(meta["schemas"]) == {"data"}
 
-    def _res(k=5, n_probe=6):
+    def _res(k=5, n_probe=6, route="ivf"):
         return {
             (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
             for r in query_ivf_index(
                 spark, queries, idx, "vec_id", "embedding", k=k,
-                n_probe=n_probe, route="ivf",
+                n_probe=n_probe, route=route,
             ).collect()
         }
 
     after_append = _res()
     assert after_append
+    brute = _res(route="brute")
+    # a meta written before schemas were recorded: both reads (brute and
+    # per-cell probe) infer the schema and return identical results
+    write_json(
+        spark, idx + "/_centroids.json",
+        {k: v for k, v in meta.items() if k != "schemas"},
+    )
+    assert _res() == after_append
+    assert _res(route="brute") == brute
+    write_json(spark, idx + "/_centroids.json", meta)
     # appended vectors are genuinely searchable: recall vs brute force
     # over the FULL corpus (probing generously to isolate append
     # correctness from quantizer coarseness)
@@ -2334,3 +2346,68 @@ def test_append_aborts_never_clobbers_when_lease_displaced(
     assert read_json(spark, idx + "/_centroids.json")["batches"] == {
         "0": 20, "1": 20, "2": 20,
     }
+
+
+def test_guard_data_writes_keeps_write_error_when_probe_fails(spark, tmp_path):
+    """A failed data write re-checks the lease; when that check itself
+    fails with anything but LeaseLostError, the data-write error is the
+    one that surfaces, not the probe's."""
+    from projet_5spar_sparkstreaming_spark.fsio import writer_lease
+
+    def broken_validate():
+        raise OSError("lease probe failed")
+
+    with writer_lease(spark, str(tmp_path / "probe_idx")) as lease:
+        lease.validate = broken_validate
+        with pytest.raises(ValueError, match="data write failed"):
+            with lease.guard_data_writes():
+                raise ValueError("data write failed")
+
+
+def test_guard_replay_detected_from_batch_dir_on_disk(spark, tmp_path):
+    """An append killed between its data write and its meta write leaves
+    ``batch_id=N`` on disk with no meta entry. Its replay must still be
+    classed as a replay, so the guard plans the survivors (listing the
+    index) BEFORE the append's overwrite deletes those files."""
+    import os
+    import time
+
+    from projet_5spar_sparkstreaming_spark.operators.dedup import (
+        MINHASH,
+        build_minhash_index,
+        read_minhash_meta,
+    )
+    from projet_5spar_sparkstreaming_spark.operators.stored_index import (
+        batch_written,
+    )
+    from projet_5spar_sparkstreaming_spark.streaming.dedup import _guard_step
+
+    idx = str(tmp_path / "mh_orphan")
+    build_minhash_index(_docs_df(spark, [_doc(0, 0)]), idx, "doc_id", "text")
+    meta = read_minhash_meta(spark, idx)
+    assert not batch_written(spark, MINHASH, idx, meta, 5)
+    os.makedirs(f"{idx}/sigs/batch_id=5")  # the crashed append's data
+    assert "5" not in meta["batches"]
+    assert batch_written(spark, MINHASH, idx, meta, 5)
+    assert batch_written(spark, MINHASH, idx, meta, 0)  # meta entry
+
+    def run(batch_id):
+        planned, seen = [], []
+
+        def survivors():
+            time.sleep(0.5)  # a concurrent append would start meanwhile
+            planned.append(True)
+            return _docs_df(spark, [_doc(batch_id, batch_id)])
+
+        _guard_step(
+            spark, MINHASH, idx, batch_id, meta,
+            build=lambda: pytest.fail("the index exists: no build"),
+            append=lambda: seen.append(bool(planned)),
+            survivors=survivors,
+            out_dir=str(tmp_path / "out"),
+        )
+        assert os.path.isdir(str(tmp_path / "out" / f"batch_id={batch_id}"))
+        return seen
+
+    assert run(5) == [True], "replay must plan the survivors first"
+    assert run(6) == [False], "a fresh batch overlaps plan and append"

@@ -150,7 +150,7 @@ def test_meta_recorded_schema_matches_legacy_inference(spark, sf_dir, tmp_path):
 
     from projet_5spar_sparkstreaming_spark.fsio import write_json
     from projet_5spar_sparkstreaming_spark.operators.dedup import (
-        _minhash_meta_path,
+        MINHASH,
         build_minhash_index,
         minhash_query_index,
         read_minhash_meta,
@@ -169,7 +169,7 @@ def test_meta_recorded_schema_matches_legacy_inference(spark, sf_dir, tmp_path):
     with_schema = sorted(map(tuple, minhash_query_index(
         new, idx, "doc_id", "text", threshold=0.5).collect()))
     meta.pop("schemas")
-    write_json(spark, _minhash_meta_path(idx), meta)
+    write_json(spark, MINHASH.meta_path(idx), meta)
     legacy = sorted(map(tuple, minhash_query_index(
         new, idx, "doc_id", "text", threshold=0.5).collect()))
     assert with_schema == legacy and with_schema

@@ -50,6 +50,7 @@ def main() -> None:
     from projet_5spar_sparkstreaming_spark import fsio
     from projet_5spar_sparkstreaming_spark.operators import dedup as od
     from projet_5spar_sparkstreaming_spark.operators import similarity as sim
+    from projet_5spar_sparkstreaming_spark.operators import stored_index as si
     from projet_5spar_sparkstreaming_spark.session import get_spark
     from projet_5spar_sparkstreaming_spark.streaming import dedup as sd
     from projet_5spar_sparkstreaming_spark.sources.files import read_parquet_table
@@ -57,10 +58,9 @@ def main() -> None:
     spark = get_spark("profile_stream_batch")
 
     # phase wrappers
-    _wrap(od, "read_minhash_meta")
+    _wrap(si, "read_meta")  # the guards' one meta read per batch
     _wrap(od, "minhash_signature_arrow")
     _wrap(od, "append_to_minhash_index")
-    _wrap(sim, "read_embed_lsh_meta")
     _wrap(sim, "append_to_embed_lsh_index")
     _wrap(sim, "embed_lsh_query_index")
     _wrap(od, "minhash_query_index")
